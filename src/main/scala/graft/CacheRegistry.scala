@@ -54,13 +54,17 @@ object CacheRegistry {
     * Runs CapStats' deferred engagement counts FIRST — those counts scan
     * the persisted frames registered here (cheap post-action cache scans),
     * so the sweep must not drop the cache before they run (they would
-    * silently recompute the whole lineage uncached).
+    * silently recompute the whole lineage uncached). A failing count is
+    * rethrown only after the sweep: a failed query must not leave its
+    * caches registered for the next one.
     */
   def releaseAll(): Unit = synchronized {
-    CapStats.await()
-    frames.foreach(_.unpersist(false))
-    frames.clear()
-    memo.clear()
+    try CapStats.await()
+    finally {
+      frames.foreach(_.unpersist(false))
+      frames.clear()
+      memo.clear()
+    }
   }
 
   /** Registered frames not yet released (for tests). */

@@ -54,12 +54,15 @@ object CapStats {
   def recordDeferred(tag: String)(count: => Long)(warn: Long => Unit): Unit =
     pending.add((tag, () => count, warn))
 
-  /** Run every outstanding deferred count (rethrowing the first failure,
-    * named by its tag). Idempotent; called by every stats read and by
-    * CacheRegistry.releaseAll before it unpersists the frames the counts
-    * scan.
+  /** Run every outstanding deferred count, then rethrow the first failure
+    * (named by its tag, later ones attached as suppressed). The queue is
+    * drained even when a count fails, so no count of a failed query runs
+    * later inside the next query's timed region. Idempotent; called by
+    * every stats read and by CacheRegistry.releaseAll before it unpersists
+    * the frames the counts scan.
     */
   def await(): Unit = {
+    val failures = scala.collection.mutable.ArrayBuffer.empty[Throwable]
     var entry = pending.poll()
     while (entry != null) {
       val (tag, count, warn) = entry
@@ -70,11 +73,18 @@ object CapStats {
       } catch {
         case e: InterruptedException => throw e
         case e: Throwable =>
-          throw new RuntimeException(s"CapStats deferred count for '$tag' failed", e)
+          failures += new RuntimeException(s"CapStats deferred count for '$tag' failed", e)
       }
       entry = pending.poll()
     }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
   }
+
+  /** Deferred counts registered and not yet run (for tests). */
+  private[graft] def pendingCount: Int = pending.size
 
   /** The most recent drop count for `tag`, if that cap has been consulted
     * this JVM.

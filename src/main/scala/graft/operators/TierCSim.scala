@@ -4187,10 +4187,14 @@ object TierCSim {
   private val KcoreRounds = 4
   private[graft] val ChunkGraphDfCap = envCap("SPARK_GRAFT_CHUNK_GRAPH_DF_CAP", 64)
 
+  // MATERIALIZED: e{k-1} and k{k} are each referenced twice per round, so
+  // DuckDB's default CTE inlining re-expands the whole peel chain at every
+  // reference (40.9 s at sf0.001, over OracleBudgetSpec's budget); pinned,
+  // each round evaluates once (0.05 s, same rows).
   private def kcoreRoundCtes(rounds: Int): String =
     (1 to rounds).map { k =>
-      s"""k$k AS (SELECT s FROM e${k - 1} GROUP BY s HAVING COUNT(*) >= 2),
-         |            e$k AS (SELECT e.s, e.d FROM e${k - 1} e
+      s"""k$k AS MATERIALIZED (SELECT s FROM e${k - 1} GROUP BY s HAVING COUNT(*) >= 2),
+         |            e$k AS MATERIALIZED (SELECT e.s, e.d FROM e${k - 1} e
          |              JOIN k$k a ON e.s = a.s JOIN k$k b ON e.d = b.s)""".stripMargin
     }.mkString(",\n            ")
 
@@ -4212,7 +4216,7 @@ object TierCSim {
             prs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
               FROM p a JOIN p b ON a.fp = b.fp AND a.doc_id < b.doc_id
               GROUP BY 1, 2),
-            e0 AS (SELECT id_a AS s, id_b AS d FROM prs
+            e0 AS MATERIALIZED (SELECT id_a AS s, id_b AS d FROM prs
                    UNION ALL SELECT id_b, id_a FROM prs),
             ${kcoreRoundCtes(KcoreRounds)}
             SELECT s AS doc_id, COUNT(*) AS deg
@@ -4358,17 +4362,21 @@ object TierCSim {
     * unrolls the same 3 rounds as CTEs.
     */
   private val HitsIters = 3
+  // MATERIALIZED: each iteration's raw sums and ranks are referenced twice
+  // (normalizer + rank join, next iteration + final select), and e/n in
+  // every iteration; inlined, DuckDB re-expands the chain per reference
+  // (22.1 s at sf0.001 against 0.07 s pinned, same rows).
   private def hitsIterSql(i: Int): String =
-    s"""hr$i AS (SELECT e.src AS id, SUM(a${i - 1}.v) AS raw
+    s"""hr$i AS MATERIALIZED (SELECT e.src AS id, SUM(a${i - 1}.v) AS raw
               FROM e JOIN a${i - 1} ON a${i - 1}.id = e.dst GROUP BY e.src),
             hs$i AS (SELECT COALESCE(SUM(raw), 0) AS s FROM hr$i),
-            h$i AS (SELECT n.id,
+            h$i AS MATERIALIZED (SELECT n.id,
               CAST(COALESCE(hr$i.raw, 0) * 1000000 // GREATEST(hs$i.s, 1) AS BIGINT) AS v
               FROM n LEFT JOIN hr$i ON hr$i.id = n.id CROSS JOIN hs$i),
-            ar$i AS (SELECT e.dst AS id, SUM(h$i.v) AS raw
+            ar$i AS MATERIALIZED (SELECT e.dst AS id, SUM(h$i.v) AS raw
               FROM e JOIN h$i ON h$i.id = e.src GROUP BY e.dst),
             asum$i AS (SELECT COALESCE(SUM(raw), 0) AS s FROM ar$i),
-            a$i AS (SELECT n.id,
+            a$i AS MATERIALIZED (SELECT n.id,
               CAST(COALESCE(ar$i.raw, 0) * 1000000 // GREATEST(asum$i.s, 1) AS BIGINT) AS v
               FROM n LEFT JOIN ar$i ON ar$i.id = n.id CROSS JOIN asum$i)"""
 
@@ -4430,9 +4438,9 @@ object TierCSim {
                 CAST(unnest(range(0, CAST(ceil(len(toks) / 8.0) AS BIGINT))) AS BIGINT) AS idx
                 FROM t WHERE len(toks) > 0)),
             ow AS (SELECT fp, MIN(doc_id) AS owner FROM inst GROUP BY fp),
-            e AS (SELECT DISTINCT inst.doc_id AS src, ow.owner AS dst
+            e AS MATERIALIZED (SELECT DISTINCT inst.doc_id AS src, ow.owner AS dst
               FROM inst JOIN ow ON inst.fp = ow.fp WHERE inst.doc_id <> ow.owner),
-            n AS (SELECT doc_id AS id FROM documents GROUP BY doc_id),
+            n AS MATERIALIZED (SELECT doc_id AS id FROM documents GROUP BY doc_id),
             a0 AS (SELECT id, CAST(1000000 AS BIGINT) AS v FROM n),
             ${(1 to HitsIters).map(hitsIterSql).mkString(",\n            ")}
             SELECT n.id AS doc_id, h$HitsIters.v AS hub_e6, a$HitsIters.v AS auth_e6

@@ -22,16 +22,18 @@ object Tables {
     * path whose footer says `s` plans the exact same FileSourceScan).
     */
   private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), org.apache.spark.sql.types.StructType]()
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, org.apache.spark.sql.types.StructType)]()
 
-  /** Source mtime for the memo key (ADVICE r17): the driver regenerates
-    * testdata at the SAME paths, and every other mtime-keyed cache in the
-    * repo (TierA fixtures, bucketedTables, ivfPqIndexFixture) refreshes on
-    * that; a path-only schema memo would silently serve a stale schema to
-    * `spark.read.schema(...)` (nulls/missing columns, not an error) if a
-    * table's shape ever changed at a reused path within one JVM. A
-    * directory-shaped parquet path keys on the dir's own mtime (rewrites
-    * replace files inside it, bumping it).
+  /** Source mtime stored with each memo entry (ADVICE r17): testdata is
+    * regenerated at the SAME paths, and every other mtime-keyed
+    * cache in the repo (TierA fixtures, bucketedTables, ivfPqIndexFixture)
+    * refreshes on that; a schema served without the mtime check would
+    * silently feed a stale schema to `spark.read.schema(...)` (nulls/missing
+    * columns, not an error) if a table's shape ever changed at a reused
+    * path within one JVM. A directory-shaped parquet path checks the dir's
+    * own mtime (rewrites replace files inside it, bumping it). The memo is
+    * keyed by path alone and an entry is replaced when its mtime differs,
+    * so it holds one entry per table path however often tables are rewritten.
     */
   private def mtime(path: String): Long =
     try java.nio.file.Files.getLastModifiedTime(java.nio.file.Paths.get(path)).toMillis
@@ -39,15 +41,18 @@ object Tables {
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val key = (path, mtime(path))
-    val cached = schemaMemo.get(key)
-    if (cached != null) spark.read.schema(cached).parquet(path)
+    val m = mtime(path)
+    val cached = schemaMemo.get(path)
+    if (cached != null && cached._1 == m) spark.read.schema(cached._2).parquet(path)
     else {
       val df = spark.read.parquet(path)
-      schemaMemo.put(key, df.schema)
+      schemaMemo.put(path, (m, df.schema))
       df
     }
   }
+
+  /** Memo entries held (for tests). */
+  private[sources] def schemaMemoSize: Int = schemaMemo.size
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")

@@ -55,4 +55,22 @@ class CacheRegistrySpec extends AnyFunSuite {
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"net-new persisted RDDs after withReleased: $leaked")
   }
+
+  test("a failing deferred count still releases every frame and drains the other counts") {
+    import spark.implicits._
+    CacheRegistry.releaseAll()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    CacheRegistry.persist(Seq(1, 2).toDF("x")).count()
+    var ran = 0
+    CapStats.recordDeferred("spec_count_fails")(throw new IllegalStateException("boom"))(_ => ())
+    CapStats.recordDeferred("spec_count_after")({ ran += 1; 0L })(_ => ())
+    val e = intercept[RuntimeException](CacheRegistry.releaseAll())
+    assert(e.getMessage.contains("spec_count_fails"), e.getMessage)
+    assert(CacheRegistry.registeredCount == 0, "a failed count must not skip the unpersist")
+    assert(CapStats.pendingCount == 0, "a failed count must not leave later counts pending")
+    assert(ran == 1, "the count queued after the failing one must still run")
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"net-new persisted RDDs after a failed releaseAll: $leaked")
+    CapStats.clear()
+  }
 }

@@ -1615,7 +1615,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // r18: the 25-polygon side is pinned broadcast so the exact refine
     // runs in the (spread) scan stage, not behind a two-sided cell
     // exchange whose task count AQE sizes by bytes instead of compute
-    for (name <- Seq("a11d_spatial_join", "a11f_polygon_join", "a11aq_knn_join")) {
+    for (name <- Seq("a11d_spatial_join", "a11f_polygon_join", "a11aq_knn_join",
+        "a11j_nearest_poly")) {
       val p = plan(name)
       assert(p.contains("BroadcastHashJoin"),
         s"$name: the cell join must broadcast the polygon side:\n" + p)

@@ -109,4 +109,21 @@ class TablesSpec extends AnyFunSuite {
       s"normalized ts out of plausible epoch range: [$lo, $hi] µs — " +
         "a unit error (ns vs µs vs ms) in the normalization arm")
   }
+
+  test("schema memo: a table rewritten at the same path is re-read, one entry per path") {
+    import s.implicits._
+    val sfDir = java.nio.file.Files.createTempDirectory("memo").toString
+    val path = java.nio.file.Paths.get(sfDir, "t.parquet")
+    Seq((1L, "a")).toDF("id", "name").write.parquet(path.toString)
+    assert(Tables.table(s, sfDir, "t").columns.toSeq == Seq("id", "name"))
+    val before = Tables.schemaMemoSize
+    Seq((1L, 2.5, "a")).toDF("id", "score", "name").write.mode("overwrite").parquet(path.toString)
+    // the rewrite must show as a new mtime even on a coarse-grained clock
+    java.nio.file.Files.setLastModifiedTime(path,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 60000L))
+    assert(Tables.table(s, sfDir, "t").columns.toSeq == Seq("id", "score", "name"),
+      "a rewritten table must not be read with its stale memoized schema")
+    assert(Tables.schemaMemoSize == before,
+      "the rewrite must replace the path's memo entry, not add one")
+  }
 }

@@ -74,6 +74,55 @@ class StreamingSpec extends AnyFunSuite {
     assert(first == second, "replaying the same batch changed the store")
   }
 
+  test("A9/A12: a micro-batch runs its dedup plan once (profile + write over the persisted batch)") {
+    val (ms, transport) = newStream()
+    val store = tmpDir("store") + "/once"
+    val q = FeaturePipeline.runToStore(spark, transport, Seq("roads"),
+      store, tmpDir("ckpt"), watermark = "10 minutes")
+    try {
+      val seen = wire("roads", "r1", 1000000L)
+      ms.addData(seen)
+      q.processAllAvailable()
+      val dup = wire("roads", "r2", 1000000L)
+      // in-batch duplicate, cross-batch retransmit, a new key, an unrouted row
+      ms.addData(dup, dup, seen, wire("roads", "r3", 1000000L), wire("rivers", "w1", 1000000L))
+      q.processAllAvailable()
+      val p = q.recentProgress.filter(_.numInputRows > 0).last
+      assert(p.numInputRows == 5L)
+      val routed = 4L
+      val executionsPerTrigger = 1L
+      // every execution of the batch plan adds its kept + duplicate + late
+      // rows to the dedup operator's counters: one execution sees each
+      // routed row once
+      val counted = p.stateOperators.map(op => op.numRowsUpdated + op.numRowsDroppedByWatermark +
+        Option(op.customMetrics.get("numDroppedDuplicateRows")).map(_.longValue).getOrElse(0L)).sum
+      assert(counted == routed * executionsPerTrigger,
+        s"the dedup plan ran ${counted.toDouble / routed} times for one trigger")
+      assert(readStore(store).count() == 3L)
+    } finally q.stop()
+  }
+
+  test("A9: an empty batch leaves an existing store's files untouched") {
+    import spark.implicits._
+    import java.nio.file.{Files => JFiles, Paths}
+    import scala.jdk.CollectionConverters._
+    val store = tmpDir("store") + "/empty"
+    val batch = Seq(("roads", "r1", Map("k" -> "1"))).toDF("layer", "feature_id", "props")
+      .select($"layer", $"feature_id", $"props",
+        timestamp_micros(lit(1000000L)).as("event_ts"),
+        lit("s").as("source"), lit(1).as("fmt_version"))
+    FeaturePipeline.upsertBatch(batch, store)
+    def snapshot(): Map[String, (Long, Long)] =
+      JFiles.walk(Paths.get(store)).iterator().asScala
+        .filter(JFiles.isRegularFile(_))
+        .map(p => p.toString -> ((JFiles.getLastModifiedTime(p).toMillis, JFiles.size(p))))
+        .toMap
+    val before = snapshot()
+    FeaturePipeline.upsertBatch(batch.filter(lit(false)), store)
+    assert(snapshot() == before, "an empty batch rewrote store files")
+    assert(!JFiles.exists(Paths.get(store + "_swap")), "an empty batch started a swap")
+  }
+
   test("storeStats: per-layer counts, freshest ts, and extent union over WKB") {
     import spark.implicits._
     import graft.functions.Wkb
@@ -455,6 +504,20 @@ class StreamingSpec extends AnyFunSuite {
     val r = out.orderBy($"prop_n").collect()
     assert(r(0).getAs[Long]("prop_n") == -3L && r(1).getAs[Double]("prop_f") == 1.5)
     assert(r(1).getAs[Boolean]("prop_b") && !r(0).getAs[Boolean]("prop_b"))
+  }
+
+  test("A8: a key whose values are all null stays string; per-layer counts add up across layers") {
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    val batch = Seq[(String, Map[String, String])](
+      ("roads", Map("nul" -> null, "n" -> "5", "f" -> null)),
+      ("rivers", Map("nul" -> null, "n" -> "7", "f" -> "2.5")),
+      ("parks", null))
+      .toDF("layer", "props")
+    val t = FeaturePipeline.evolveColumns(batch).schema.map(f => f.name -> f.dataType).toMap
+    assert(t("prop_nul") == StringType, "no non-null value to type by: must stay string")
+    assert(t("prop_n") == LongType, "integral in every layer must land as long")
+    assert(t("prop_f") == DoubleType, "null in one layer, 2.5 in another must land as double")
   }
 
   test("A8: cross-batch type conflict widens the store without flipping earlier rows") {
