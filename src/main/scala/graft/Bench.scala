@@ -3,110 +3,42 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // Optional args = query-name filter (local profiling; the driver
     // passes none and gets the full suite).
     val only = args.toSet
-    // Untimed warmup: JIT/codegen/parquet-reader init otherwise lands on
-    // whichever query runs first (measured 10-20s attributed to the
-    // alphabetically-first heavy query). One small representative query
-    // per engine path (scan, shuffle agg, UDF) warms the common machinery;
-    // per-query numbers then reflect steady-state cost.
-    // Synthetic-only: nothing here touches the timed sf dir, so no timed
-    // query is pre-warmed with its own data — warmers exercise the same
-    // engine machinery (parquet IO, shuffle agg, string/array exprs) on
-    // throwaway in-memory / temp-dir inputs.
+    Harness.warm(spark)
+    // Fixture materialization for the file-format scans: the .shp/.dbf
+    // and .gpkg fixtures are written once per JVM on first use; inside
+    // the timed query that charged ~1-2.5s of one-time collect+write
+    // cost to a1b/a1c's first pass. Building them here keeps the timed
+    // queries pure read-path. (Deliberately the ONE warmup that touches
+    // the sf dir: it pre-reads only the events table to write a
+    // DIFFERENT-format file — the timed work being measured is the
+    // byte-level .shp/.gpkg parse, which no warmup touches.)
+    // r17: widened from shp+gpkg to EVERY fixture format — the driver
+    // regenerates testdata each round, so at round start all 17 fixtures
+    // are stale and each format's first timed query used to eat its
+    // one-time collect+write (0.3-1.3 s each; see OPTIMIZATION_r17.md,
+    // measurement fix per guide §1.4).
     try {
-      spark.range(1000).selectExpr("sum(id)").collect()
-      locally { // parquet writer+reader init on a temp file
-        import org.apache.spark.sql.functions._
-        val tmp = java.nio.file.Files.createTempDirectory("graft-warm").toString
-        spark.range(4096).selectExpr("id", "cast(id as string) as s", "id % 7 as k")
-          .write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).filter(col("k") > 2)
-          .groupBy("k").agg(sum("id"), countDistinct("s")).count()
-      }
-      locally { // string/array/hash expr paths (split/filter/array_join/md5)
-        import spark.implicits._
-        import org.apache.spark.sql.functions._
-        (1 to 512).map(i => s"doc $i  has   text").toDF("text")
-          .select(md5(array_join(filter(split(lower($"text"), " "), t => t =!= ""), " ")))
-          .count()
-      }
-      // JIT the two remaining cold paths without touching the big tables:
-      // string tokenize/sliding (gram family) and the WKB codec UDFs —
-      // measured 2-5s of first-use cost otherwise attributed to whichever
-      // gram/spatial query runs first alphabetically
-      locally {
-        import spark.implicits._
-        import org.apache.spark.sql.functions._
-        val toks = udf { (t: String) =>
-          t.split(" ").filter(_.nonEmpty).sliding(2).map(_.mkString(" ")).toArray.distinct }
-        (1 to 256).map(i => s"w$i x$i y$i z$i").toDF("t")
-          .select(explode(toks($"t"))).count()
-        val geo = udf { (x: Double, y: Double) =>
-          val d = graft.functions.Wkb.polygon(Seq(Seq((x, y), (x + 1, y), (x + 1, y + 1), (x, y))))
-          graft.functions.Wkb.containsPoint(d, x + 0.5, y + 0.25) && graft.functions.Wkb.intersects(d, d) }
-        spark.range(256).select(geo($"id".cast("double"), $"id".cast("double"))).count()
-      }
-      // Fixture materialization for the file-format scans: the .shp/.dbf
-      // and .gpkg fixtures are written once per JVM on first use; inside
-      // the timed query that charged ~1-2.5s of one-time collect+write
-      // cost to a1b/a1c's first pass. Building them here keeps the timed
-      // queries pure read-path. (Deliberately the ONE warmup that touches
-      // the sf dir: it pre-reads only the events table to write a
-      // DIFFERENT-format file — the timed work being measured is the
-      // byte-level .shp/.gpkg parse, which no warmup touches.)
-      // r17: widened from shp+gpkg to EVERY fixture format — the driver
-      // regenerates testdata each round, so at round start all 17 fixtures
-      // are stale and each format's first timed query used to eat its
-      // one-time collect+write (0.3-1.3 s each; see OPTIMIZATION_r17.md,
-      // measurement fix per guide §1.4).
-      locally {
-        graft.operators.TierA.allFixtures(spark, sfDir)
-        // the three derived LAYOUTS with the same once-per-JVM mtime-keyed
-        // pattern: bucketed join tables (b124/b124b), the partition-pruned
-        // events dir (b125), and the saved IVF-PQ index whose probe query
-        // is declared build-once/probe-many (c3_ivfpq_prebuilt) — each
-        // first timed query otherwise eats the one-time write
-        graft.operators.TierB.bucketedTables(spark, sfDir)
-        graft.operators.TierB.partitionedEvents(spark, sfDir)
-        graft.operators.TierCSim.ivfPqIndexFixture(spark, sfDir)
-      }
+      graft.operators.TierA.allFixtures(spark, sfDir)
+      // the three derived LAYOUTS with the same once-per-JVM mtime-keyed
+      // pattern: bucketed join tables (b124/b124b), the partition-pruned
+      // events dir (b125), and the saved IVF-PQ index whose probe query
+      // is declared build-once/probe-many (c3_ivfpq_prebuilt) — each
+      // first timed query otherwise eats the one-time write
+      graft.operators.TierB.bucketedTables(spark, sfDir)
+      graft.operators.TierB.partitionedEvents(spark, sfDir)
+      graft.operators.TierCSim.ivfPqIndexFixture(spark, sfDir)
     } catch { case e: Throwable => System.err.println(s"[bench] warmup: ${e.getMessage}") }
     // Failed queries report -1.0 (never a silently-timed crash) so the
     // driver can distinguish "fast" from "broken"; errors go to stderr.
+    // Timed region = build + count() + CapStats.await() (see Harness.run);
+    // the cache release between queries is untimed.
     def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val ok =
-        // CapStats.await() INSIDE the timed region (r18): the no-silent-caps
-        // engagement counts are deferred to post-action (see CapStats), and
-        // they are part of the query's declared work — running them after
-        // the timer stopped would hide a real scan (and, for queries whose
-        // final count() prunes the capped subtree, the whole cache build)
-        // from the bench. Additions-only: for queries with no pending
-        // counts await() is a no-op and the timed region is unchanged.
-        try { fn(spark, sfDir).count(); CapStats.await(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          false
-        }
-      val secs = (System.nanoTime() - t0) / 1e9
-      // untimed sweep: queries are self-contained, so a frame persisted by
-      // one query must not squeeze executor memory (or appear as an
-      // InMemoryRelation) in a later query's run
-      // (releaseAll unpersists every strong-ref'd frame and clears the ledger)
-      CacheRegistry.releaseAll()
-      spark.catalog.clearCache()
-      if (ok) secs else -1.0
+      val o = Harness.run(spark, name)(fn(spark, sfDir).count())
+      if (o.ok) o.secs else -1.0
     }
     val declared = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -171,7 +103,7 @@ object Bench {
       // unsuffixed default made that run CLOBBER the main run's per-query
       // dict (r17: the 32-core dict was lost to the c8 rerun) — now each
       // core count lands in its own file.
-      val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH_FULL_c$cpus.json")
+      val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH_FULL_c${Harness.cpus}.json")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), fullLine + "\n")
     } catch { case e: Throwable => System.err.println(s"[bench] full-json write: ${e.getMessage}") }
   }

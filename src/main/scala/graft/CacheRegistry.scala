@@ -16,7 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The contract: every such persist is registered here, and the CALLER
   * owns release — `releaseAll()` after the returned frame's final action.
-  * The Verify/Bench harnesses call it between queries (paired with
+  * [[Harness.run]] calls it after every query of every main (paired with
   * `spark.catalog.clearCache()`); library compositions call it at
   * pipeline boundaries. References are strong (a weak ref could be
   * collected before release — the returned plan holds the logical plan,
@@ -69,13 +69,4 @@ object CacheRegistry {
 
   /** Registered frames not yet released (for tests). */
   def registeredCount: Int = synchronized { frames.length }
-
-  /** Bracket form of the release contract: run `body` (compose operators,
-    * take the final action inside), then `releaseAll()` — even on failure.
-    * Library callers that use this cannot forget the release. NOT for
-    * bodies that RETURN an unconsumed lazy frame: the frame's plan
-    * references the caches, so release must come after its final action.
-    */
-  def withReleased[A](body: => A): A =
-    try body finally releaseAll()
 }

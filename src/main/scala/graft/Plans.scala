@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates PLANS.md: formatted physical plans for the headline
   * queries, with the scale property each plan must keep (the prose twin
   * of PlanAuditSpec's assertions). Run:
@@ -675,17 +673,8 @@ object Plans {
   )
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // plain (non-AQE) plans print whole-stage codegen spans
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // plain (non-AQE) plans print whole-stage codegen spans
+    val spark = Harness.session("spark.sql.adaptive.enabled" -> "false")
     val sf = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = new StringBuilder
     out ++= "# PLANS — headline physical plans (generated by `graft.Plans`)\n\n"

@@ -4,14 +4,13 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1: measure first).
   *
   * For each named query: runs it twice (cold + warm), timing the warm pass
   * with the SAME `.count()` action the bench uses, and records per-query
   * job/stage/task counts and shuffle bytes from a SparkListener — the
-  * local[32] stand-in for the Spark UI's stage table. Also dumps
+  * local-mode stand-in for the Spark UI's stage table. Also dumps
   * `.explain("formatted")` to `<outDir>/<name>.txt` so plan claims are
   * checkable offline.
   *
@@ -23,15 +22,7 @@ object Profile {
     val sfDir = args(0)
     val outDir = args(1)
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     Files.createDirectories(Paths.get(outDir))
 
     val jobs = new AtomicInteger(0)
@@ -59,10 +50,13 @@ object Profile {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    // same machinery warmup the bench does, so the cold pass is comparable
+    // the bench's warm-up and fixtures, so the cold pass is comparable
+    Harness.warm(spark)
     try {
-      spark.range(1000).selectExpr("sum(id)").collect()
       graft.operators.TierA.allFixtures(spark, sfDir)
+      graft.operators.TierB.bucketedTables(spark, sfDir)
+      graft.operators.TierB.partitionedEvents(spark, sfDir)
+      graft.operators.TierCSim.ivfPqIndexFixture(spark, sfDir)
     } catch { case e: Throwable => System.err.println(s"[profile] warmup: ${e.getMessage}") }
 
     names.foreach { name =>
@@ -70,35 +64,31 @@ object Profile {
         case None => System.err.println(s"[profile] unknown query: $name")
         case Some(fn) =>
           // cold pass (codegen/JIT) — timed separately
-          val c0 = System.nanoTime()
-          try { fn(spark, sfDir).count(); CapStats.await() }
-          catch { case e: Throwable => System.err.println(s"[profile] $name cold FAILED: ${e.getMessage}") }
-          val coldS = (System.nanoTime() - c0) / 1e9
-          CacheRegistry.releaseAll(); spark.catalog.clearCache()
+          val coldS = Harness.run(spark, name)(fn(spark, sfDir).count()).secs
           // warm measured pass — planning (analysis+optimization+physical
           // planning, driver-side single-threaded) timed separately from
           // execution so the "is it Catalyst or the cluster" question has
           // a number (guide §7.3)
           jobs.set(0); stages.set(0); tasks.set(0); shufRead.set(0L); shufWrite.set(0L)
           jobLog.clear()
-          val t0 = System.nanoTime()
-          val df = fn(spark, sfDir)
-          val planNs = try { df.queryExecution.executedPlan; System.nanoTime() - t0 }
-            catch { case _: Throwable => System.nanoTime() - t0 }
-          df.count()
-          // deferred cap counts are timed work — same rationale as Bench
-          CapStats.await()
-          val secs = (System.nanoTime() - t0) / 1e9
-          val planS = planNs / 1e9
-          val plan = try df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          catch { case e: Throwable => s"explain failed: ${e.getMessage}" }
-          Files.writeString(Paths.get(s"$outDir/$name.txt"), plan)
-          CacheRegistry.releaseAll(); spark.catalog.clearCache()
-          println(f"$name%-28s cold ${coldS}%7.2f  warm ${secs}%7.2f s  plan ${planS}%5.2f  jobs ${jobs.get}%3d  stages ${stages.get}%4d  tasks ${tasks.get}%5d  shufR ${shufRead.get / 1024}%8d KiB  shufW ${shufWrite.get / 1024}%8d KiB")
-          import scala.jdk.CollectionConverters._
-          if (sys.env.contains("SPARK_GRAFT_PROFILE_JOBS"))
-            jobLog.asScala.toSeq.sorted.foreach(println)
+          val warm = Harness.run(spark, name) {
+            val t0 = System.nanoTime()
+            val df = fn(spark, sfDir)
+            df.queryExecution.executedPlan
+            val planS = (System.nanoTime() - t0) / 1e9
+            df.count()
+            (df, planS)
+          }
+          warm.result.foreach { case (df, planS) =>
+            val plan = try df.queryExecution.explainString(
+              org.apache.spark.sql.execution.FormattedMode)
+            catch { case e: Throwable => s"explain failed: ${e.getMessage}" }
+            Files.writeString(Paths.get(s"$outDir/$name.txt"), plan)
+            println(f"$name%-28s cold ${coldS}%7.2f  warm ${warm.secs}%7.2f s  plan ${planS}%5.2f  jobs ${jobs.get}%3d  stages ${stages.get}%4d  tasks ${tasks.get}%5d  shufR ${shufRead.get / 1024}%8d KiB  shufW ${shufWrite.get / 1024}%8d KiB")
+            import scala.jdk.CollectionConverters._
+            if (sys.env.contains("SPARK_GRAFT_PROFILE_JOBS"))
+              jobLog.asScala.toSeq.sorted.foreach(println)
+          }
       }
     }
     spark.stop()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-soak runner (VERDICT r13 directive #1): times named registry
   * queries against a [[ScaleGen]]-materialized directory (sf1/sf5) so the
   * families engineered for 100 TB show a MEASURED scaling curve, not just
@@ -16,30 +14,15 @@ object ScaleBench {
     require(args.length >= 2, "usage: ScaleBench <sfDir> <query> [query...]")
     val sfDir = args.head
     val names = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // At soak scale the per-partition volume, not the operator, is what
-    // 32 bench-posture partitions get wrong — a real cluster sizes
-    // partition count with the data (PLANS.md C7). Default 32/sf-unit:
-    // pass SPARK_GRAFT_SHUFFLE explicitly per soak point.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the Bench.scala warmers minus the fixture writers (whose driver-side
-    // collect caps are deliberately too small for soak-scale events)
-    try {
-      spark.range(1000).selectExpr("sum(id)").collect()
-      import spark.implicits._
-      import org.apache.spark.sql.functions._
-      (1 to 512).map(i => s"doc $i  has   text").toDF("text")
-        .select(md5(array_join(filter(split(lower($"text"), " "), t => t =!= ""), " ")))
-        .count()
-    } catch { case e: Throwable => System.err.println(s"[scalebench] warmup: ${e.getMessage}") }
+    // bench-posture partitions get wrong — a real cluster sizes partition
+    // count with the data (PLANS.md C7). Default cpus: pass
+    // SPARK_GRAFT_SHUFFLE explicitly per soak point.
+    val spark = Harness.session("spark.sql.shuffle.partitions" ->
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", Harness.cpus.toString))
+    // no fixture writers: their driver-side collect caps are deliberately
+    // too small for soak-scale events
+    Harness.warm(spark)
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     // min-of-k (SPARK_GRAFT_REPEAT, default 1): the r14 c2_dedup_near
@@ -47,42 +30,27 @@ object ScaleBench {
     // 6× — is exactly what a min-of-2 makes impossible to misread
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "1").toInt
     names.foreach { name =>
-      var best = Double.MaxValue
-      var rows = -1L
-      var err: Throwable = null
-      var i = 0
-      while (i < repeat && err == null) {
-        val t0 = System.nanoTime()
-        // default action is count() — comparable with Bench and every
-        // prior soak row, but the optimizer PRUNES deterministic
-        // projection columns under it (measured r17: a11ax at sf1 is
-        // 1.8 s counted vs 9.5 s evaluated), so for PROJECTION-ONLY
-        // queries it times scan+plan, not the operator.
-        // SPARK_GRAFT_EVAL=full forces full row evaluation via the
-        // executed plan's RDD — use it when soaking map-side compute.
-        try {
-          val df = SparkEntry.queries(name)(spark, sfDir)
-          rows =
-            if (sys.env.get("SPARK_GRAFT_EVAL").contains("full"))
-              df.queryExecution.toRdd.count()
-            else df.count()
-        }
-        catch { case e: Throwable => err = e }
-        finally { CacheRegistry.releaseAll(); spark.catalog.clearCache() }
-        val sec = (System.nanoTime() - t0) / 1e9
-        if (sec < best) best = sec
-        i += 1
+      // default action is count() — comparable with Bench and every
+      // prior soak row, but the optimizer PRUNES deterministic
+      // projection columns under it (measured r17: a11ax at sf1 is
+      // 1.8 s counted vs 9.5 s evaluated), so for PROJECTION-ONLY
+      // queries it times scan+plan, not the operator.
+      // SPARK_GRAFT_EVAL=full forces full row evaluation via the
+      // executed plan's RDD — use it when soaking map-side compute.
+      def once() = Harness.run(spark, name) {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        if (sys.env.get("SPARK_GRAFT_EVAL").contains("full")) df.queryExecution.toRdd.count()
+        else df.count()
       }
-      if (err == null)
-        println(f"""{"query":"$name","sec":$best%.2f,"rows":$rows,"sf_dir":"$sfDir"}""")
-      else {
-        // String.valueOf: NPE/EOFException carry a null message, and a
-        // secondary NPE here would abort the remaining soak queries
-        val msg = String.valueOf(err.getMessage) match {
-          case "null" => err.toString
-          case m      => m
-        }
-        println(f"""{"query":"$name","sec":-1.0,"err":"${msg.take(120).replace("\"", "'")}","sf_dir":"$sfDir"}""")
+      // min-of-k, stopping at the first failure
+      var runs = Vector(once())
+      while (runs.size < repeat && runs.last.ok) runs :+= once()
+      runs.last.result match {
+        case Right(rows) =>
+          println(f"""{"query":"$name","sec":${runs.map(_.secs).min}%.2f,"rows":$rows,"sf_dir":"$sfDir"}""")
+        case Left(e) =>
+          val err = Harness.jsonString(Harness.describe(e).take(120))
+          println(s"""{"query":"$name","sec":-1.0,"err":$err,"sf_dir":"$sfDir"}""")
       }
     }
     spark.stop()

@@ -277,16 +277,9 @@ object ScaleGen {
     require(unknownModes.isEmpty, s"scalegen: unknown modes $unknownModes")
     val skew = modes("skew")
     val charnoise = modes("charnoise")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     def rows(perSf: Long): Long = math.max(1L, (perSf * sf).toLong)
-    val parts = math.max(cpus.toInt, (sf * 32).toInt)
+    val parts = math.max(Harness.cpus, (sf * 32).toInt)
     def land(name: String, df: DataFrame, nParts: Int = parts): Unit = {
       val t0 = System.nanoTime()
       df.repartition(nParts).write.mode("overwrite").parquet(s"$outDir/$name.parquet")

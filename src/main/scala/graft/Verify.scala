@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,15 +7,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // extra args = query-name filter (local iteration; driver passes none)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // Oracle-type lint (loud, non-fatal here so one bad SQL can't zero the
     // whole round's dump; OracleLintSpec turns the same check into a hard
     // test failure): uncast DuckDB window SUMs return HUGEINT and
@@ -25,7 +16,6 @@ object Verify {
       System.err.println(s"[verify][lint] $name: uncast window SUM (DuckDB HUGEINT) near: $snip")
     }
     new java.io.File(outDir).mkdirs()
-    var written = 0
     // A typo'd --only name would otherwise yield a clean '{declared: 0,
     // written: 0}' — the silent-absence class this block exists to catch.
     val unknown = only.diff(SparkEntry.queries.keySet)
@@ -34,34 +24,15 @@ object Verify {
         s"query: ${unknown.toSeq.sorted.mkString(", ")}")
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
-    selected.foreach { case (name, fn) =>
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        written += 1
-      }
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // queries are self-contained; drop any frames a query persisted so
-      // 60+ queries in one JVM don't accumulate executor-memory caches
-      // (releaseAll unpersists every strong-ref'd frame and clears the ledger)
-      finally { CacheRegistry.releaseAll(); spark.catalog.clearCache() }
+    // a failed query is logged by Harness.run and left out of `written`
+    val written = selected.count { case (name, fn) =>
+      Harness.run(spark, name) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      }.ok
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Harness.jsonString(k)}: ${Harness.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Registry-vs-dump reconciliation (VERDICT r9 #7): a query that crashes
     // is otherwise silently ABSENT from the driver's correctness JSON; this

@@ -622,24 +622,6 @@ object Crs {
     p
   }
 
-  /** Register an arbitrary-parameter Albers equal-area conic grid. */
-  def registerAlbers(srid: Int, phi1Deg: Double, phi2Deg: Double,
-      phi0Deg: Double, lon0Deg: Double, falseE: Double, falseN: Double,
-      invF: Double = Grs80InvF): AlbersEqArea = {
-    val p = new AlbersEqArea(srid, SemiMajor, invF, phi1Deg, phi2Deg, phi0Deg,
-      lon0Deg, falseE, falseN)
-    register(srid, p.forward _, p.inverse _)
-    p
-  }
-
-  /** Register an arbitrary-parameter oblique LAEA grid. */
-  def registerLaea(srid: Int, phi0Deg: Double, lon0Deg: Double,
-      falseE: Double, falseN: Double, invF: Double = Grs80InvF): Laea = {
-    val p = new Laea(srid, SemiMajor, invF, phi0Deg, lon0Deg, falseE, falseN)
-    register(srid, p.forward _, p.inverse _)
-    p
-  }
-
   /** Remove a custom registration (no-op if absent; shipped codes are
     * untouchable by construction).
     */

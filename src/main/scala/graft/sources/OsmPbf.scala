@@ -608,17 +608,6 @@ object OsmPbf {
       .toDF()
   }
 
-  /** Way-tolerant node scan feeding [[wayFeatures]] — the nodes half of a
-    * mixed file. [[read]] stays strict for the pure-DenseNodes contract.
-    */
-  private[graft] def readNodesTolerant(spark: SparkSession, pathGlob: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select($"content").as[Array[Byte]]
-      .flatMap(bytes => parseAll(bytes)._1)
-      .toDF()
-  }
-
   /** Assemble way geometries as a DISTRIBUTED join against the node
     * store — the only shape that survives a planet-sized node table:
     *

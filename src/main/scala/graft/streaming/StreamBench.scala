@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -36,14 +36,7 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val scale = args.headOption.map(_.toInt).getOrElse(1)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     import spark.implicits._
     implicit val ctx = spark.sqlContext
 

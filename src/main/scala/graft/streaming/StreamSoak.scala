@@ -3,7 +3,6 @@ package graft.streaming
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
@@ -44,20 +43,13 @@ object StreamSoak {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val slices = args.drop(1).headOption.map(_.toInt).getOrElse(20)
     val mode = args.drop(2).headOption.getOrElse("sessionize")
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-stream-soak")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // the dedup soak exercises the production state backend — RocksDB —
     // so the state_mem number is the real store's, not the HDFS-backed
     // in-memory map's
-    if (mode == "dedup" || mode == "heartbeat")
-      builder.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val rocks = Seq("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val spark = graft.Harness.session(
+      (if (mode == "dedup" || mode == "heartbeat") rocks else Nil): _*)
     import spark.implicits._
 
     val t0us = 1704067200000000L

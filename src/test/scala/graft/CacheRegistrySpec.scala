@@ -35,27 +35,6 @@ class CacheRegistrySpec extends AnyFunSuite {
     assert(leaked.isEmpty, s"net-new persisted RDDs after releaseAll: $leaked")
   }
 
-  test("withReleased brackets the release — on success AND on failure") {
-    import spark.implicits._
-    CacheRegistry.releaseAll()
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val n = CacheRegistry.withReleased {
-      val docs = graft.sources.Tables.documents(spark, SparkFixture.sfDir)
-      graft.operators.TierCSim.simhashPairs(spark, docs, 3).count()
-    }
-    assert(n >= 0L)
-    assert(CacheRegistry.registeredCount == 0, "bracket must release on success")
-    intercept[RuntimeException] {
-      CacheRegistry.withReleased {
-        CacheRegistry.persist(Seq(1, 2).toDF("x")).count()
-        throw new RuntimeException("boom")
-      }
-    }
-    assert(CacheRegistry.registeredCount == 0, "bracket must release on failure")
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty, s"net-new persisted RDDs after withReleased: $leaked")
-  }
-
   test("a failing deferred count still releases every frame and drains the other counts") {
     import spark.implicits._
     CacheRegistry.releaseAll()
