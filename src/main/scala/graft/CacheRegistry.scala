@@ -2,6 +2,7 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Cache-ownership contract for operator-internal `persist()` calls.
@@ -26,15 +27,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Persists that only serve index-build actions inside an operator
   * (sample collects, counts) are NOT registered — those are unpersisted
   * before the function returns.
+  *
+  * The ledger holds one release per registered cache: a persisted frame,
+  * or the block-holding RDD of a lineage barrier ([[Par.barrier]]), whose
+  * blocks no `Dataset.unpersist` reaches.
   */
 object CacheRegistry {
-  private val frames = ArrayBuffer.empty[DataFrame]
+  private val owned = ArrayBuffer.empty[() => Unit]
 
   /** Persist `df` and register it for caller-owned release. */
   def persist(df: DataFrame): DataFrame = synchronized {
     df.persist()
-    frames += df
+    owned += (() => df.unpersist(false))
     df
+  }
+
+  /** Register `rdd`'s blocks for caller-owned release. */
+  def own(rdd: RDD[_]): Unit = synchronized {
+    owned += (() => rdd.unpersist(blocking = false))
   }
 
   private val memo = scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
@@ -50,7 +60,7 @@ object CacheRegistry {
   def memoPersist(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
     synchronized { memo.getOrElseUpdate((s, key), persist(build)) }
 
-  /** Unpersist every registered frame (non-blocking) and clear the ledger.
+  /** Unpersist every registered cache (non-blocking) and clear the ledger.
     * Runs CapStats' deferred engagement counts FIRST — those counts scan
     * the persisted frames registered here (cheap post-action cache scans),
     * so the sweep must not drop the cache before they run (they would
@@ -61,12 +71,12 @@ object CacheRegistry {
   def releaseAll(): Unit = synchronized {
     try CapStats.await()
     finally {
-      frames.foreach(_.unpersist(false))
-      frames.clear()
+      owned.foreach(_())
+      owned.clear()
       memo.clear()
     }
   }
 
-  /** Registered frames not yet released (for tests). */
-  def registeredCount: Int = synchronized { frames.length }
+  /** Registered caches not yet released (for tests). */
+  def registeredCount: Int = synchronized { owned.length }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import scala.util.Using
+
 import org.apache.spark.sql.SparkSession
 
 /** The one query lifecycle every main runs on: one session builder, one
@@ -14,6 +18,11 @@ import org.apache.spark.sql.SparkSession
   * queries, not work the query asked for, and a failed query's release
   * may re-run its failed lineage through a pending count, which must not
   * be billed to any timing.
+  *
+  * After the release, any persisted RDD the query added and nobody
+  * registered is a leak: [[run]] reports it on stderr and on the outcome,
+  * then unpersists it, so the next query starts clean and the defect
+  * still shows.
   */
 object Harness {
   /** Cores for `local[cpus]` and the shuffle partition count:
@@ -52,11 +61,13 @@ object Harness {
       import org.apache.spark.sql.functions._
       spark.range(1000).selectExpr("sum(id)").collect()
       // parquet writer+reader init on a temp file
-      val tmp = java.nio.file.Files.createTempDirectory("graft-warm").toString
-      spark.range(4096).selectExpr("id", "cast(id as string) as s", "id % 7 as k")
-        .write.mode("overwrite").parquet(tmp)
-      spark.read.parquet(tmp).filter(col("k") > 2)
-        .groupBy("k").agg(sum("id"), countDistinct("s")).count()
+      val tmp = Files.createTempDirectory("graft-warm")
+      try {
+        spark.range(4096).selectExpr("id", "cast(id as string) as s", "id % 7 as k")
+          .write.mode("overwrite").parquet(tmp.toString)
+        spark.read.parquet(tmp.toString).filter(col("k") > 2)
+          .groupBy("k").agg(sum("id"), countDistinct("s")).count()
+      } finally deleteTree(tmp)
       // string/array/hash expr paths (split/filter/array_join/md5)
       (1 to 512).map(i => s"doc $i  has   text").toDF("text")
         .select(md5(array_join(filter(split(lower($"text"), " "), t => t =!= ""), " ")))
@@ -74,10 +85,15 @@ object Harness {
       spark.range(256).select(geo($"id".cast("double"), $"id".cast("double"))).count()
     } catch { case e: Throwable => System.err.println(s"[harness] warmup: ${describe(e)}") }
 
-  /** One query's run: the seconds of its timed region, and the action's
-    * value or the failure, named by query.
+  private def deleteTree(root: Path): Unit =
+    Using.resource(Files.walk(root))(
+      _.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p)))
+
+  /** One query's run: the seconds of its timed region, the action's value
+    * or the failure, named by query, and the number of persisted RDDs the
+    * query left behind after its release.
     */
-  final case class Outcome[A](secs: Double, result: Either[Throwable, A]) {
+  final case class Outcome[A](secs: Double, result: Either[Throwable, A], leaked: Int) {
     def ok: Boolean = result.isRight
   }
 
@@ -87,14 +103,20 @@ object Harness {
     * deferred count that fails inside `releaseAll`) is contained: attached
     * to the outcome as a failure and never thrown past the query, so the
     * next query starts with no registered frame and no pending count.
-    * Every failure is logged to stderr.
+    * Every failure, and every leaked RDD (see the object doc), is logged to
+    * stderr.
     */
   def run[A](spark: SparkSession, name: String)(action: => A): Outcome[A] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
     val t0 = System.nanoTime()
     val timed: Either[Throwable, A] =
       try { val a = action; CapStats.await(); Right(a) }
       catch { case e: Throwable => Left(new RuntimeException(s"query '$name' failed: ${describe(e)}", e)) }
     val secs = (System.nanoTime() - t0) / 1e9
+    // strong references: the ContextCleaner must not drop a leaked RDD
+    // before it is counted
+    val held = sc.getPersistentRDDs
     // queries are self-contained: a frame persisted by one query must not
     // squeeze executor memory (or appear as an InMemoryRelation) in the next
     val result =
@@ -106,7 +128,13 @@ object Harness {
         }
       }
     result.left.foreach(f => System.err.println(s"[harness] ${describe(f)}"))
-    Outcome(secs, result)
+    val leaked = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }.values
+    java.lang.ref.Reference.reachabilityFence(held)
+    if (leaked.nonEmpty) {
+      System.err.println(s"[harness] query '$name' left ${leaked.size} persisted RDDs")
+      leaked.foreach(_.unpersist(blocking = false))
+    }
+    Outcome(secs, result, leaked.size)
   }
 
   /** A failure as one line: its message (its class when it has none),

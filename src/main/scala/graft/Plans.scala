@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 /** Regenerates PLANS.md: formatted physical plans for the headline
   * queries, with the scale property each plan must keep (the prose twin
   * of PlanAuditSpec's assertions). Run:
-  * `sbt "runMain graft.Plans"` (writes /root/repo/PLANS.md).
+  * `sbt "runMain graft.Plans"` (writes PLANS.md to the working directory).
   */
 object Plans {
   private val audited: Seq[(String, String)] = Seq(
@@ -202,7 +202,7 @@ object Plans {
       "table is scanned exactly once."),
     "b52_hierarchy_closure" -> ("Recursive-CTE workload as path " +
       "doubling: 6 closure∘closure equi-joins cover depth 64 (O(log d) " +
-      "shuffles, not O(d)); each round localCheckpoints so the " +
+      "shuffles, not O(d)); each round is an eager lineage barrier so the " +
       "twice-referenced closure reads one materialized RDD and the " +
       "plan stays O(round) instead of doubling (scan shows the " +
       "checkpoint, not a 6-deep join tree)."),
@@ -254,7 +254,7 @@ object Plans {
       "lineitem scan — no correlated rescan, no self-join, no window; " +
       "supplier→nation broadcasts, and the part join rides the " +
       "aggregate's existing partkey partitioning."),
-    "c2_kcore" -> ("k-core peel: each round eagerly localCheckpoints " +
+    "c2_kcore" -> ("k-core peel: each round is an eager lineage barrier " +
       "(every round references the previous edge list TWICE — fringe " +
       "aggregate + anti join — and lazy persist measured 2^rounds " +
       "recomputation: 1.7/3.2/15.8 s at 1/2/4 rounds); the final plan " +
@@ -687,7 +687,7 @@ object Plans {
         org.apache.spark.sql.execution.SimpleMode).take(6000)
       out ++= "\n```\n"
     }
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), out.toString)
+    Files.writeString(Paths.get("PLANS.md"), out.toString)
     println(s"wrote PLANS.md (${audited.size} plans)")
     spark.stop()
   }

@@ -2092,17 +2092,17 @@ object TierB {
         .filter($"user_id" >= 2)
         .select($"user_id", expr("user_id div 2").as("ancestor"),
           lit(1L).as("depth"))
-      // localCheckpoint per round, NOT persist: the self-join references
-      // the closure twice, so an un-truncated plan doubles per round
-      // (measured as a 2.1 MiB task binary by round 6 with persist-only —
-      // the starComponents lineage discipline, TierCSim barrier note)
-      var clo = graft.Par.pin(edges)
+      // eager lineage barrier per round, NOT persist: the self-join
+      // references the closure twice, so an un-truncated plan doubles per
+      // round (measured as a 2.1 MiB task binary by round 6 with
+      // persist-only — the starComponents lineage discipline)
+      var clo = graft.Par.barrier(edges, eager = true)
       (1 to 6).foreach { _ =>
         val l = clo.select($"user_id", $"ancestor".as("mid"), $"depth".as("d1"))
         val r = clo.select($"user_id".as("mid_r"), $"ancestor", $"depth".as("d2"))
         val composed = l.join(r, $"mid" === $"mid_r")
           .select($"user_id", $"ancestor", ($"d1" + $"d2").as("depth"))
-        clo = graft.Par.pin(clo.unionByName(composed).distinct())
+        clo = graft.Par.barrier(clo.unionByName(composed).distinct(), eager = true)
       }
       clo.orderBy($"user_id", $"depth")
     }

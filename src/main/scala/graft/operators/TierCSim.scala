@@ -4,9 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
-import graft.{CacheRegistry, QuerySpec}
+import graft.{CacheRegistry, Par, QuerySpec}
 import graft.functions.{MinHash, TextStats}
 import graft.sources.Tables
 
@@ -565,20 +564,21 @@ object TierCSim {
       // carry the old label inside the frame: ONE action both materializes
       // the round and measures convergence (a separate changed-join would
       // double the per-round job count — measured ~2s/round at sf0.1).
-      // Lazy localCheckpoint, not persist: each round references `labels`
+      // Lazy lineage barrier, not persist: each round references `labels`
       // 2× (the nbrMin join + the outer join), so an un-truncated lineage
       // TRIPLES per round — and every per-round action stringifies the
       // whole plan for the SQL listener, so plan analysis AND the plan-
       // string render grow 3^rounds (measured: minutes of pure driver
       // generateTreeString on an 8-node chain late in a shared session).
-      // The checkpoint restarts the plan from a leaf each round; the
-      // convergence count is the materializing action, and superseded
-      // round blocks are reclaimed by the ContextCleaner.
-      val next = labels.join(nbrMin, labels("id") === nbrMin("nid"), "left")
-        .select(labels("id"),
-          least($"cluster", coalesce($"nbr_min", $"cluster")).as("cluster"),
-          labels("cluster").as("old"))
-        .localCheckpoint(eager = false)
+      // The barrier restarts the plan from a leaf each round; the
+      // convergence count is the materializing action, and every round's
+      // blocks are released with the query.
+      val next = Par.barrier(
+        labels.join(nbrMin, labels("id") === nbrMin("nid"), "left")
+          .select(labels("id"),
+            least($"cluster", coalesce($"nbr_min", $"cluster")).as("cluster"),
+            labels("cluster").as("old")),
+        eager = false)
       changed = next.filter($"cluster" =!= $"old").count()
       labels = next.select($"id", $"cluster")
       iter += 1
@@ -661,9 +661,8 @@ object TierCSim {
     * r13 bench: the CC family is the suite's slowest class at any SF),
     * which is the RIGHT price for a 100 TB pair graph and the wrong one
     * for a banding run that produced 4k edges. The cap is a driver-memory
-    * constant (65536 edges ≈ 1 MB collected; override with
-    * GRAFT_CC_LOCAL_CAP, 0 disables), so the decision is made on a
-    * measured count, never on an SF guess — at 100 TB a corpus-scale
+    * constant (65536 edges ≈ 1 MB collected; `localCap = 0` disables it),
+    * so the decision is made on a measured count, never on an SF guess — at 100 TB a corpus-scale
     * pair graph blows the cap on the very first fingerprint and takes
     * the distributed rounds as before.
     *
@@ -674,43 +673,18 @@ object TierCSim {
     */
   private[graft] def starComponents(s: SparkSession, nodes: DataFrame,
       edges: DataFrame, maxIters: Int = 50,
-      reliable: Boolean = false, stride: Int = 2,
-      localCap: Long = ccLocalCap): (DataFrame, Int, Int) = {
+      localCap: Long = CcLocalCap): (DataFrame, Int, Int) = {
     import s.implicits._
-    // Checkpoint, not persist: one star round references its input ~8×
+    // Lineage barrier, not persist: one star round references its input ~8×
     // (the union doubling + the groupBy/join reuse on each star), so the
     // LOGICAL plan grows 8× per round — exponential analysis cost by
-    // round ~6 if lineage is kept. Checkpointing materializes the edge
+    // round ~6 if lineage is kept. The barrier materializes the edge
     // list and restarts the plan from a leaf each round, the standard
     // discipline for iterative graph algorithms (same reason GraphFrames
-    // CC checkpoints every few iterations).
-    //
-    // `reliable = false` (default, the benched local path): localCheckpoint
-    // pins blocks to executors. Cheapest barrier, but lineage is TRUNCATED
-    // — on a real cluster, losing one executor mid-iteration loses blocks
-    // that cannot be recomputed, and the whole job dies (deterministic, so
-    // a full rerun is safe, but at 100 TB a rerun is hours).
-    // `reliable = true` (the operational 100 TB path): each pass's output
-    // edge set is written to the configured reliable checkpoint dir
-    // (HDFS/S3 on a cluster), so executor loss costs at most one pass's
-    // recompute from durable storage instead of the whole job. The MID
-    // round then uses persist() rather than localCheckpoint — the barrier
-    // still collapses the ~8 intra-round references onto one computed RDD,
-    // while the KEPT lineage (rooted at the reliable-checkpointed `cur`,
-    // so only ~2 star rounds deep — bounded) makes lost mid-blocks
-    // recomputable. Old checkpoint files are reclaimed by the
-    // ContextCleaner when spark.cleaner.referenceTracking.cleanCheckpoints
-    // is set; otherwise the caller owns the dir's lifecycle.
-    if (reliable) require(s.sparkContext.getCheckpointDir.isDefined,
-      "starComponents(reliable = true) needs spark.sparkContext.setCheckpointDir " +
-        "pointed at durable storage (HDFS/S3) — that durability is the point of the flag")
-    def barrier(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
-    var cur = {
-      val d = edges.select($"src".as("u"), $"dst".as("v"))
-        .filter($"u" =!= $"v").distinct()
-      if (reliable) d.checkpoint() else d.localCheckpoint()
-    }
+    // CC checkpoints every few iterations). With a checkpoint dir set,
+    // every pass is recoverable from durable storage (see Par.barrier).
+    var cur = Par.barrier(edges.select($"src".as("u"), $"dst".as("v"))
+      .filter($"u" =!= $"v").distinct(), eager = true)
     // decimal(38,0) sum: exact and order-invariant, and can't hit the
     // ANSI long-overflow 2^63 wrap a raw sum of 64-bit hashes would
     def fp(e: DataFrame): (Long, String) = {
@@ -749,49 +723,28 @@ object TierCSim {
     var actions = 1 // the initial fingerprint
     var converged = false
     while (!converged && rounds < maxIters) {
-      // Lazy checkpoint: the fingerprint aggregation is the pass's ONE
-      // action — it runs `stride` star rounds and persists their
-      // checkpoint blocks as side effects (an eager checkpoint would
-      // cost extra full jobs per pass just to materialize first). Every
-      // MID round must also checkpoint: a star round references its
-      // input ~8×, and only the checkpoint barrier makes those
-      // references share one computed RDD — fusing rounds into one
-      // un-checkpointed plan re-executes the inner round per reference
-      // (measured ~2× whole-query cost at sf0.1). The per-action plan
-      // stays bounded at ~8·stride nodes because each mid barrier cuts
-      // lineage. Stride semantics are safe at any value: the alternation
-      // is a monotone contraction (no period-k cycle to alias with), a
-      // converged set stays converged, and the only cost of a larger
-      // stride is up to stride-1 no-op rounds after the fixed point —
-      // which is also why stride stays small (r11 measured 2 vs 3 vs 4
-      // at sf0.1: see BENCH_NOTES.md; the winner is the default).
-      // Reliable mode persists the pass's frames around the fingerprint
-      // action: a reliable checkpoint writes its files in a SECOND job
-      // after the computing action, so without the cache the pass would
-      // compute twice (the persist-before-checkpoint discipline).
-      val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      // Lazy barrier: the fingerprint aggregation is the pass's ONE
+      // action — it runs `CcStride` star rounds and materializes their
+      // barriers as side effects (an eager barrier would cost extra full
+      // jobs per pass just to materialize first). Every MID round must
+      // also be a barrier: a star round references its input ~8×, and
+      // only the barrier makes those references share one computed RDD —
+      // fusing rounds into one un-checkpointed plan re-executes the inner
+      // round per reference (measured ~2× whole-query cost at sf0.1). The
+      // per-action plan stays bounded at ~8·stride nodes because each mid
+      // barrier cuts lineage. Stride semantics are safe at any value: the
+      // alternation is a monotone contraction (no period-k cycle to alias
+      // with), a converged set stays converged, and the only cost of a
+      // larger stride is up to stride-1 no-op rounds after the fixed
+      // point — which is also why stride stays small (r11 measured 2 vs 3
+      // vs 4 at sf0.1: see BENCH_NOTES.md; the winner is CcStride).
       var x = cur
-      var k = 1
-      while (k <= stride) {
-        val y0 = smallStar(largeStar(x))
-        val y =
-          if (reliable) {
-            val p = y0.persist(StorageLevel.MEMORY_AND_DISK)
-            cached += p
-            if (k < stride) p else barrier(p)
-          } else if (k < stride) y0.localCheckpoint(eager = false)
-          else barrier(y0)
-        x = y
-        k += 1
-      }
+      (1 to CcStride).foreach(_ => x = Par.barrier(smallStar(largeStar(x)), eager = false))
       val nextFp = fp(x)
-      cached.foreach(_.unpersist())
-      // superseded checkpoint blocks are reclaimed by the ContextCleaner
-      // once `cur` is unreachable (unpersist() doesn't cover checkpoints)
       cur = x
       converged = nextFp == prevFp
       prevFp = nextFp
-      rounds += stride
+      rounds += CcStride
       actions += 1
     }
     val und = cur.union(cur.select($"v".as("u"), $"u".as("v")))
@@ -802,27 +755,23 @@ object TierCSim {
     (labels, rounds, actions)
   }
 
-  /** Star rounds fused per driver action. Env-overridable (GRAFT_CC_STRIDE)
-    * purely for bench A/B runs; the default is the measured winner — r11
+  /** Star rounds fused per driver action: the measured winner — r11
     * compared {2, 3, 4} at sf0.1 on c2_cluster/c2_dedup_corpus/
     * c1j_cluster_split, see BENCH_NOTES.md.
     */
-  private[graft] val ccStride: Int =
-    sys.env.get("GRAFT_CC_STRIDE").map(_.toInt).getOrElse(2)
+  private val CcStride = 2
 
   /** Distinct-edge ceiling for [[starComponents]]'s driver union-find fast
-    * path (~1 MB collected at the default). Env-overridable
-    * (GRAFT_CC_LOCAL_CAP); 0 disables, forcing the distributed rounds.
+    * path (~1 MB collected).
     */
-  private[graft] val ccLocalCap: Long =
-    sys.env.get("GRAFT_CC_LOCAL_CAP").map(_.toLong).getOrElse(65536L)
+  private val CcLocalCap = 65536L
 
   /** Star-contraction CC with the same (nodes, edges) → (id, cluster)
     * contract as [[connectedComponents]]; the variant `c2_cluster` runs.
     */
   def connectedComponentsStar(s: SparkSession, nodes: DataFrame,
-      edges: DataFrame, maxIters: Int = 50, reliable: Boolean = false): DataFrame =
-    starComponents(s, nodes, edges, maxIters, reliable, stride = ccStride)._1
+      edges: DataFrame, maxIters: Int = 50): DataFrame =
+    starComponents(s, nodes, edges, maxIters)._1
 
   private val ClusterThreshold = 0.3
   /** Recursive-reachability CTE prefix shared by the `c2_cluster` and
@@ -4176,8 +4125,8 @@ object TierCSim {
     * count plus two ANTI joins of the edge list against the round's
     * REMOVED fringe (deg<2) — the fringe is the small side in every
     * round after the first, so AQE broadcast-antis it and the edge list
-    * streams instead of shuffling; never a window. Each round's frame is
-    * eagerly localCheckpointed (the b52/starComponents discipline — see
+    * streams instead of shuffling; never a window. Each round's frame goes
+    * through an eager lineage barrier (the b52/starComponents discipline — see
     * the measured 2^rounds blowup note at the loop) so round k+1 reads a
     * materialized edge list, not a twice-referenced growing join tree.
     * Synchronous peel shrinks monotonically; the round count is a
@@ -4250,14 +4199,14 @@ object TierCSim {
         .join(posting.select($"fp".as("fp_b"), $"doc_id".as("id_b")),
           $"fp" === $"fp_b" && $"id_a" < $"id_b")
         .groupBy($"id_a", $"id_b").agg(count(lit(1)).as("shared"))
-      // localCheckpoint per round, NOT persist: every round references the
-      // previous edge list TWICE (fringe aggregate + the anti join), so an
+      // eager lineage barrier per round, NOT persist: every round references
+      // the previous edge list TWICE (fringe aggregate + the anti join), so an
       // un-truncated plan DOUBLES per round — measured 1.7 s (1 round) →
       // 3.2 (2) → 15.8 (4) at sf0.001 with lazy persist, i.e. 2^rounds
       // recomputation; the b52/starComponents lineage discipline cuts it
       // back to linear.
-      var e = graft.Par.pin(prs.select($"id_a".as("s"), $"id_b".as("d"))
-        .unionAll(prs.select($"id_b".as("s"), $"id_a".as("d"))))
+      var e = Par.barrier(prs.select($"id_a".as("s"), $"id_b".as("d"))
+        .unionAll(prs.select($"id_b".as("s"), $"id_a".as("d"))), eager = true)
       var converged = false
       (1 to KcoreRounds).foreach { _ =>
         // peel via ANTI joins against the round's REMOVED fringe (deg<2),
@@ -4274,11 +4223,11 @@ object TierCSim {
         // The fringe is checkpointed anyway to feed both anti joins, so
         // the emptiness probe costs one take(1) on materialized rows.
         if (!converged) {
-          val bad = graft.Par.pin(e.groupBy($"s").agg(count(lit(1)).as("deg"))
-            .filter($"deg" < 2).select($"s".as("k")))
+          val bad = Par.barrier(e.groupBy($"s").agg(count(lit(1)).as("deg"))
+            .filter($"deg" < 2).select($"s".as("k")), eager = true)
           if (bad.isEmpty) converged = true
-          else e = graft.Par.pin(e.join(bad, $"s" === $"k", "left_anti")
-            .join(bad.select($"k".as("kd")), $"d" === $"kd", "left_anti"))
+          else e = Par.barrier(e.join(bad, $"s" === $"k", "left_anti")
+            .join(bad.select($"k".as("kd")), $"d" === $"kd", "left_anti"), eager = true)
         }
       }
       e.groupBy($"s").agg(count(lit(1)).as("deg"))
@@ -4398,7 +4347,7 @@ object TierCSim {
     var a = n.select($"id", lit(1000000L).as("v"))
     var h = a
     for (_ <- 1 to iters) {
-      // localCheckpoint per join-agg, the kcore/b52 lineage discipline:
+      // eager lineage barrier per join-agg, the kcore/b52 discipline:
       // hraw/araw are each referenced TWICE (the normalizer's broadcast
       // build + the rank join), so un-materialized the recompute tree
       // branches ×4 per iteration — measured 54 jobs / 2.3 s of pure
@@ -4407,14 +4356,14 @@ object TierCSim {
       // the plan flat (24 jobs / 1.3 s total, same output).
       val hraw = e.join(a.select($"id".as("aid"), $"v"), $"dst" === $"aid")
         .groupBy($"src").agg(sum($"v").as("raw"))
-        .transform(graft.Par.pin)
+        .transform(Par.barrier(_, eager = true))
       val hsum = hraw.agg(coalesce(sum($"raw"), lit(0L)).as("s"))
       h = n.join(hraw, $"id" === $"src", "left").crossJoin(broadcast(hsum))
         .select($"id",
           expr("coalesce(raw, 0L) * 1000000 div greatest(s, 1L)").as("v"))
       val araw = e.join(h.select($"id".as("hid"), $"v"), $"src" === $"hid")
         .groupBy($"dst").agg(sum($"v").as("raw"))
-        .transform(graft.Par.pin)
+        .transform(Par.barrier(_, eager = true))
       val asum = araw.agg(coalesce(sum($"raw"), lit(0L)).as("s"))
       a = n.join(araw, $"id" === $"dst", "left").crossJoin(broadcast(asum))
         .select($"id",

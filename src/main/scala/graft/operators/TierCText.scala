@@ -2091,8 +2091,8 @@ object TierCText {
         merges += ((step.toLong, a, b, a + b, cnt))
         // symbols are [a-z]+ by the word filter, so embedding them as SQL
         // string literals needs no escaping.
-        // (r18 re-probe of the r17 call: Par.pin-per-round — flatten the
-        // stacked replace chain with an eager localCheckpoint each round —
+        // (r18 re-probe of the r17 call: an eager lineage barrier per
+        // round (now Par.barrier) to flatten the stacked replace chain —
         // was A/B'd alternating at this HEAD and REVERTED: encode min
         // 3.12 s pinned vs 3.01 unpinned, train 2.60 vs 2.32; ten ~40 ms
         // checkpoint jobs cost more than the K² tiny-map replays save.

@@ -1,15 +1,17 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the one query lifecycle ([[Harness.run]]): every query's caches
   * and deferred cap counts are released after it, a failure — the
-  * action's or the release's — stays with the query that caused it, and
-  * no main builds its own session.
+  * action's or the release's — stays with the query that caused it, a
+  * persisted RDD nobody registered is reported and dropped, no main builds
+  * its own session and no code outside [[Par.barrier]] checkpoints.
   */
 class HarnessSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.session
@@ -32,6 +34,7 @@ class HarnessSpec extends AnyFunSuite {
     }
     assert(!failed.ok)
     assert(CacheRegistry.registeredCount == 0, "run must release on failure")
+    assert(ok.leaked == 0 && failed.leaked == 0, (ok.leaked, failed.leaked))
     val leaked = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
     assert(leaked.isEmpty, s"net-new persisted RDDs after run: $leaked")
   }
@@ -71,6 +74,30 @@ class HarnessSpec extends AnyFunSuite {
     assert(leaked.isEmpty, s"net-new persisted RDDs after A and B: $leaked")
   }
 
+  test("run reports and drops a persisted RDD nobody registered") {
+    CacheRegistry.releaseAll()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val buf = new java.io.ByteArrayOutputStream()
+    val err = System.err
+    System.setErr(new java.io.PrintStream(buf, true))
+    val out =
+      try Harness.run(spark, "spec_leaks")(spark.sparkContext.parallelize(1 to 10).persist().count())
+      finally System.setErr(err)
+    assert(out.result == Right(10L) && out.leaked == 1, out)
+    assert(buf.toString.contains("[harness] query 'spec_leaks' left 1 persisted RDDs"), buf.toString)
+    val left = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
+    assert(left.isEmpty, s"net-new persisted RDDs after run: $left")
+  }
+
+  test("warm leaves no temp directory behind") {
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def warmDirs(): Set[String] = Using.resource(Files.list(tmp))(
+      _.iterator.asScala.map(_.getFileName.toString).filter(_.startsWith("graft-warm")).toSet)
+    val before = warmDirs()
+    Harness.warm(spark)
+    assert(warmDirs().diff(before).isEmpty, warmDirs().diff(before))
+  }
+
   test("jsonString round-trips quotes, backslashes and control chars") {
     val s = "analysis error: \"col\" at C:\\tmp\nnext line\ttab \u0001 end"
     val back = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -78,16 +105,21 @@ class HarnessSpec extends AnyFunSuite {
     assert(back == s)
   }
 
-  test("only Harness builds a session or reads SPARK_GRAFT_CPUS") {
+  test("only Harness builds a session or reads SPARK_GRAFT_CPUS, only Par checkpoints") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"no main sources at ${root.toAbsolutePath}")
-    val harness = root.resolve("graft/Harness.scala")
+    val checkpoint = """\.(localCheckpoint|checkpoint)\b""".r.unanchored
+    // (the one file allowed to, what no other file may contain)
+    val rules: Seq[(Path, String => Boolean)] = Seq(
+      root.resolve("graft/Harness.scala") ->
+        (l => l.contains("SparkSession.builder") || l.contains("\"SPARK_GRAFT_CPUS\"")),
+      root.resolve("graft/Par.scala") -> (l => checkpoint.matches(l)))
     val offenders = Files.walk(root).iterator.asScala
-      .filter(p => p.toString.endsWith(".scala") && p != harness)
+      .filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains("SparkSession.builder") ||
-              line.contains("\"SPARK_GRAFT_CPUS\"") => s"$p:${i + 1}: ${line.trim}"
+          case (line, i) if rules.exists { case (owner, bad) => p != owner && bad(line) } =>
+            s"$p:${i + 1}: ${line.trim}"
         }
       }.toList
     assert(offenders.isEmpty, offenders.mkString("\n"))

@@ -702,56 +702,48 @@ class SimSpec extends AnyFunSuite {
     assert(gotFast(20L) == 20L && gotFast(35L) == 30L && gotFast(4L) == 1L)
   }
 
-  test("starComponents reliable=true without a checkpoint dir fails loudly") {
+  test("starComponents with a checkpoint dir: durable checkpoints, same labels, files written") {
     import spark.implicits._
-    if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      val nodes = Seq(1L, 2L).toDF("id")
-      val edges = Seq((1L, 2L)).toDF("src", "dst")
-      intercept[IllegalArgumentException] {
-        TierCSim.starComponents(spark, nodes, edges, reliable = true)
-      }
-    }
-  }
-
-  test("starComponents reliable=true: checkpoints to durable dir, same labels, files written") {
-    import spark.implicits._
-    // the operational 100 TB path: reliable checkpoint() every pass so an
-    // executor loss costs one pass's recompute, not the whole job
+    // the operational 100 TB path: with a checkpoint dir set, every barrier
+    // is a reliable checkpoint, so an executor loss costs one pass's
+    // recompute, not the whole job
+    val mNodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L).toDF("id")
+    val mEdges = Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L)).toDF("src", "dst")
+    def labelsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val loc = labelsOf(TierCSim.connectedComponentsStar(spark, mNodes, mEdges))
     val dir = java.nio.file.Files.createTempDirectory("graft-ccckpt").toFile
-    val orig = spark.sparkContext.getCheckpointDir
+    val sc = spark.sparkContext
+    val orig = sc.getCheckpointDir
     try {
-      spark.sparkContext.setCheckpointDir(dir.getPath)
+      sc.setCheckpointDir(dir.getPath)
       val n = 64
       val nodes = (0L until n.toLong).toDF("id")
       val edges = (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("src", "dst")
-      val (labels, rounds, _) =
-        TierCSim.starComponents(spark, nodes, edges, reliable = true, localCap = 0)
-      val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val (labels, rounds, _) = TierCSim.starComponents(spark, nodes, edges, localCap = 0)
+      val got = labelsOf(labels)
       assert(got == (0L until n.toLong).map(_ -> 0L).toMap, s"wrong labels: $got")
       assert(rounds <= 12, s"reliable path took $rounds rounds on a 64-chain")
       // the durability claim is only real if bytes actually landed there
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      assert(walk(dir).nonEmpty, "reliable=true wrote no checkpoint files")
+      assert(walk(dir).nonEmpty, "a checkpoint dir was set but no checkpoint files were written")
       // multi-cluster + singleton agreement with the local path
-      val mNodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L).toDF("id")
-      val mEdges = Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L)).toDF("src", "dst")
-      val rel = TierCSim.connectedComponentsStar(spark, mNodes, mEdges, reliable = true)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val loc = TierCSim.connectedComponentsStar(spark, mNodes, mEdges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val rel = labelsOf(TierCSim.connectedComponentsStar(spark, mNodes, mEdges))
       assert(rel == loc, s"reliable and local labels diverge: $rel vs $loc")
     } finally {
-      // restore the original dir if one was set; a shared-session fixture
-      // means we can't null it back out (private var), but nothing else
-      // in the suite calls reliable checkpoint, so a dangling dir is inert
-      orig.foreach(p => spark.sparkContext.setCheckpointDir(p))
+      // a dangling dir would turn every later barrier in the shared session
+      // into a durable checkpoint into a deleted directory; in local mode
+      // setCheckpointDir(null) resets it to None
+      sc.setCheckpointDir(orig.orNull)
+      graft.CacheRegistry.releaseAll()
       def del(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(del)
         f.delete()
       }
       del(dir)
     }
+    if (orig.isEmpty) assert(sc.getCheckpointDir.isEmpty, s"checkpoint dir left set: ${sc.getCheckpointDir}")
   }
 
   test("ivfPqSearch: in-cluster recall, partition-invariant, scan bounded by cell population") {
