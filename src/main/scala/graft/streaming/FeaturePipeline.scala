@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.storage.StorageLevel
 
@@ -748,8 +748,9 @@ object FeaturePipeline {
     * (never read-while-overwrite).
     *
     * Per micro-batch cost: ONE profile job (the [[evolveColumns]] pass,
-    * which also yields the touched layers; an empty batch — e.g. the
-    * watermark's no-data trigger — stops after it) plus the store write.
+    * which also yields the touched layers; an empty batch stops after it),
+    * one schema-inference job for the store read ([[readStore]]; none on
+    * the first write) and the store write.
     * The batch is persisted (MEMORY_AND_DISK) for the call and released in
     * a `finally`: without it every action re-runs the whole upstream plan
     * (decode → route → watermark/dedup), so the stateful dedup would
@@ -772,17 +773,17 @@ object FeaturePipeline {
     // would exclude them, silently dropping stored null-layer features)
     val hasNullLayer = prof.layers.contains(None)
     val layers = prof.layers.flatten
-    val fs = new Path(storeDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val store = new Path(storeDir)
+    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a store whose every layer has expired has no layer dir: a first write
     val merged =
-      if (fs.exists(store)) {
+      if (fs.exists(store) && layerDirs(fs, store).nonEmpty) {
         // this filter prunes to the touched layer= partitions
         val touched = (
           (if (layers.nonEmpty) Seq(col("layer").isInCollection(layers)) else Nil) ++
           (if (hasNullLayer) Seq(col("layer").isNull) else Nil)
         ).reduce(_ || _)
-        val existingAll = spark.read.option("mergeSchema", "true").parquet(storeDir)
-          .withColumn("layer", col("layer").cast(StringType))
+        val existingAll = readStore(spark, storeDir)
         // Reconcile cross-batch prop column types by widening to the
         // common supertype ([[widen]]) — stored values are never nulled.
         // When the STORE side must widen, that is a schema migration: the
@@ -821,25 +822,52 @@ object FeaturePipeline {
     swapPartitions(latest, storeDir)
   }
 
+  private def layerDirs(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("layer="))
+
+  /** The one reader of the keyed store: it infers the data columns with a
+    * `mergeSchema` footer merge (one job) and reads them with `layer` typed
+    * as a string, never inferred. Partition inference would read `layer=01`
+    * as the integer 1, and a later upsert's touched-layer filter would then
+    * miss the stored rows.
+    */
+  private[streaming] def readStore(spark: SparkSession, storeDir: String): DataFrame = {
+    val data = spark.read.option("mergeSchema", "true").parquet(storeDir).schema
+      .filterNot(_.name == "layer")
+    spark.read.schema(StructType(data :+ StructField("layer", StringType))).parquet(storeDir)
+  }
+
+  /** Serialises the delete-and-rename step of [[swapPartitions]] within
+    * this JVM, so two swaps of one layer cannot interleave.
+    */
+  private val swapLock = new Object
+
   /** Swap a set of per-layer frames into the store by directory rename —
     * the shared tail of [[upsertBatch]], [[compactLayer]] and
     * [[expireOlderThan]]: write fresh, then replace each touched
     * `layer=` dir atomically-per-partition (never read-while-overwrite).
+    *
+    * Each call stages into its own `<store>_swap-<uuid>` sibling, deleted
+    * in a `finally`, so a compaction or expiry run beside a live stream
+    * cannot overwrite the stream's staged partitions.
     */
   private def swapPartitions(df: DataFrame, storeDir: String): Unit = {
     val spark = df.sparkSession
-    val fs = new Path(storeDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val store = new Path(storeDir)
-    val tmp = new Path(storeDir + "_swap")
-    df.write.mode("overwrite").partitionBy("layer").parquet(tmp.toString)
-    if (!fs.exists(store)) fs.mkdirs(store)
-    fs.listStatus(tmp).filter(_.getPath.getName.startsWith("layer="))
-      .foreach { st =>
-        val dest = new Path(store, st.getPath.getName)
-        if (fs.exists(dest)) fs.delete(dest, true)
-        fs.rename(st.getPath, dest)
+    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(s"${storeDir}_swap-${java.util.UUID.randomUUID()}")
+    try {
+      df.write.partitionBy("layer").parquet(tmp.toString)
+      swapLock.synchronized {
+        if (!fs.exists(store)) fs.mkdirs(store)
+        layerDirs(fs, tmp).foreach { st =>
+          val dest = new Path(store, st.getPath.getName)
+          if (fs.exists(dest)) fs.delete(dest, true)
+          fs.rename(st.getPath, dest)
+        }
       }
-    fs.delete(tmp, true)
+    } finally fs.delete(tmp, true)
   }
 
   /** Small-file compaction for one layer of the store: micro-batch
@@ -852,8 +880,7 @@ object FeaturePipeline {
     */
   def compactLayer(spark: SparkSession, storeDir: String, layer: String,
       targetFiles: Int = 1): Unit = {
-    val one = spark.read.option("mergeSchema", "true").parquet(storeDir)
-      .withColumn("layer", col("layer").cast(StringType))
+    val one = readStore(spark, storeDir)
       .filter(col("layer") === layer)
       .repartition(targetFiles)
     swapPartitions(one, storeDir)
@@ -866,8 +893,7 @@ object FeaturePipeline {
     */
   def expireOlderThan(spark: SparkSession, storeDir: String,
       cutoff: java.sql.Timestamp): Unit = {
-    val all = spark.read.option("mergeSchema", "true").parquet(storeDir)
-      .withColumn("layer", col("layer").cast(StringType))
+    val all = readStore(spark, storeDir)
     // bounded: distinct layers containing expired rows, not rows
     val touched = all.filter(col("event_ts") <= lit(cutoff))
       .select("layer").distinct().collect().map(r => Option(r.getString(0)))
@@ -907,8 +933,7 @@ object FeaturePipeline {
     val fs = new Path(storeDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val store = new Path(storeDir)
     if (!fs.exists(store)) return Seq.empty
-    fs.listStatus(store).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("layer="))
+    layerDirs(fs, store)
       .map { st =>
         val layer = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
           .unescapePathName(st.getPath.getName.stripPrefix("layer="))
@@ -944,14 +969,20 @@ object FeaturePipeline {
     * over WKB bboxes). One scan, partition-pruned when `layers` is given,
     * everything partial-aggregated map-side — cost follows the selected
     * layers' size at any store scale.
+    *
+    * Jobs: four — the store read's schema inference ([[readStore]]), the
+    * scan with its partial aggregate, and one per level of the two-level
+    * distinct-count aggregate. The result holds one row per layer, so it
+    * is sorted inside one partition instead of by a global `orderBy`, whose
+    * range partitioning would add a sampling job and a shuffle for those
+    * few rows.
     */
   def storeStats(spark: SparkSession, storeDir: String,
       layers: Seq[String] = Nil): DataFrame = {
     val bboxUdf = udf { (wkb: Array[Byte]) =>
       Option(wkb).map(graft.functions.Wkb.bbox)
     }
-    val all0 = spark.read.option("mergeSchema", "true").parquet(storeDir)
-      .withColumn("layer", col("layer").cast(StringType))
+    val all0 = readStore(spark, storeDir)
     val all =
       if (layers.isEmpty) all0 else all0.filter(col("layer").isInCollection(layers))
     // stores written from geometry-less envelopes have no geom_wkb column
@@ -965,23 +996,47 @@ object FeaturePipeline {
         max(col("event_ts")).as("latest_ts"),
         min(col("bb.xmin")).as("xmin"), min(col("bb.ymin")).as("ymin"),
         max(col("bb.xmax")).as("xmax"), max(col("bb.ymax")).as("ymax"))
-      .orderBy(col("layer"))
+      .coalesce(1).sortWithinPartitions(col("layer"))
   }
 
   /** The full A4→A12 consume pipeline as one streaming query. Each
     * micro-batch is the transaction unit (A10): the reference's "N inserts
     * per commit" batching maps to trigger-bounded micro-batches.
+    *
+    * One trigger per arrival: the query runs no no-data micro-batches.
+    * Spark by default follows every data trigger that advances the
+    * watermark with a trigger that only evicts state. Here that state is
+    * the dedup's, and `dropDuplicatesWithinWatermark` emits a row when it
+    * first sees a key, never on eviction, so that trigger would store
+    * nothing while paying for a profile job plus offset and commit log
+    * writes. Eviction moves to the next data trigger, which runs with the
+    * same watermark the no-data trigger would have used; without data
+    * there is no new state. A stream that keeps up with its input is idle
+    * between arrivals, so this saves one trigger per data trigger. The
+    * setting is made on the caller's session only around `start()` — the
+    * query clones the session when it is built and reads the setting from
+    * that clone — and the caller's value (or its absence) is restored.
+    * Set, start and restore run under this object's lock, so overlapping
+    * `runToStore` calls cannot restore in the wrong order. A query that
+    * another thread starts on the same session by other means inside that
+    * window still inherits the setting.
     */
   def runToStore(
       spark: SparkSession, transport: Transport, layers: Seq[String],
       storeDir: String, checkpointDir: String,
       watermark: String = "1 hour"): StreamingQuery = {
     val decoded = withEffectivelyOnce(route(decode(transport.read(spark)), layers), watermark)
-    decoded.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) => upsertBatch(batch, storeDir) }
-      .start()
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    synchronized {
+      val prev = spark.conf.getAll.get(noData)
+      spark.conf.set(noData, "false")
+      try decoded.writeStream
+        .outputMode(OutputMode.Append)
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch { (batch: DataFrame, _: Long) => upsertBatch(batch, storeDir) }
+        .start()
+      finally prev.fold(spark.conf.unset(noData))(spark.conf.set(noData, _))
+    }
   }
 
   /** B33 on the Spark 4 arbitrary-state API: same running (count, max ts)

@@ -120,7 +120,91 @@ class StreamingSpec extends AnyFunSuite {
     val before = snapshot()
     FeaturePipeline.upsertBatch(batch.filter(lit(false)), store)
     assert(snapshot() == before, "an empty batch rewrote store files")
-    assert(!JFiles.exists(Paths.get(store + "_swap")), "an empty batch started a swap")
+    val staging = JFiles.list(Paths.get(store).getParent).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("empty_swap")).toSeq
+    assert(staging.isEmpty, s"a swap left its staging directory behind: $staging")
+  }
+
+  private def storeBatch(layer: String, fid: String, props: Map[String, String],
+      tsUs: Long = 1000000L): DataFrame = {
+    import spark.implicits._
+    Seq((layer, fid, props)).toDF("layer", "feature_id", "props")
+      .select($"layer", $"feature_id", $"props",
+        timestamp_micros(lit(tsUs)).as("event_ts"),
+        lit("s").as("source"), lit(1).as("fmt_version"))
+  }
+
+  test("A9: a numeric-looking layer name stays a string through upsert and storeStats") {
+    val store = tmpDir("store") + "/numlayer"
+    FeaturePipeline.upsertBatch(storeBatch("01", "a", Map("k" -> "1")), store)
+    // the second upsert must merge with the stored "01" rows, not replace them
+    FeaturePipeline.upsertBatch(storeBatch("01", "b", Map("k" -> "2")), store)
+    val rows = FeaturePipeline.readStore(spark, store).select("layer", "feature_id")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(rows == Set(("01", "a"), ("01", "b")), s"store holds $rows")
+    val stats = FeaturePipeline.storeStats(spark, store).collect()
+    assert(stats.map(r => (r.getString(0), r.getAs[Long]("n_rows"))).toSeq == Seq(("01", 2L)))
+  }
+
+  test("A9 ops: every swap stages in its own directory — a foreign <store>_swap survives compactLayer") {
+    import java.nio.file.{Files => JFiles, Paths}
+    import scala.jdk.CollectionConverters._
+    val store = tmpDir("store") + "/staged"
+    FeaturePipeline.upsertBatch(storeBatch("roads", "r1", Map("k" -> "1")), store)
+    FeaturePipeline.upsertBatch(storeBatch("roads", "r2", Map("k" -> "2")), store)
+    // what another swap (say, a live stream's) has staged at the old fixed path
+    val foreign = Paths.get(store + "_swap", "layer=roads", "part-staged")
+    JFiles.createDirectories(foreign.getParent)
+    JFiles.write(foreign, Array[Byte](1, 2, 3))
+    FeaturePipeline.compactLayer(spark, store, "roads")
+    assert(JFiles.exists(foreign), "compactLayer wiped another swap's staged partition")
+    assert(FeaturePipeline.readStore(spark, store).count() == 2L)
+    val staging = JFiles.list(Paths.get(store).getParent).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("staged_swap-")).toSeq
+    assert(staging.isEmpty, s"compactLayer left its staging directory behind: $staging")
+  }
+
+  test("A9: a store whose every layer has expired takes the next upsert as a first write") {
+    val store = tmpDir("store") + "/expired"
+    FeaturePipeline.upsertBatch(storeBatch("roads", "r1", Map("k" -> "1")), store)
+    FeaturePipeline.expireOlderThan(spark, store, new java.sql.Timestamp(5000L))
+    FeaturePipeline.upsertBatch(storeBatch("roads", "r2", Map("k" -> "2"), tsUs = 9000000L), store)
+    val rows = FeaturePipeline.readStore(spark, store).select("layer", "feature_id")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(rows == Set(("roads", "r2")), s"store holds $rows")
+  }
+
+  test("A4-A12: runToStore runs no state-only trigger between data batches") {
+    val (ms, transport) = newStream()
+    val store = tmpDir("store") + "/nodata"
+    val q = FeaturePipeline.runToStore(spark, transport, Seq("roads"),
+      store, tmpDir("ckpt"), watermark = "10 minutes")
+    try {
+      // each batch moves the watermark (max event time - 10 min) forward
+      ms.addData(wire("roads", "r1", 3600L * 1000000L))
+      q.processAllAvailable()
+      ms.addData(wire("roads", "r2", 7200L * 1000000L))
+      q.processAllAvailable()
+      val progress = q.recentProgress.toSeq
+      assert(progress.count(_.numInputRows > 0) == 2)
+      assert(progress.forall(_.numInputRows > 0),
+        s"no-data triggers ran: ${progress.map(p => p.batchId -> p.numInputRows)}")
+      assert(readStore(store).count() == 2L)
+    } finally q.stop()
+  }
+
+  test("A4-A12: runToStore leaves the caller's noDataMicroBatches setting as it was") {
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val original = spark.conf.getAll.get(key)
+    def set(v: Option[String]): Unit = v.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    try Seq(None, Some("true"), Some("false")).foreach { v =>
+      set(v)
+      val (_, transport) = newStream()
+      val q = FeaturePipeline.runToStore(spark, transport, Seq("roads"),
+        tmpDir("store") + "/conf", tmpDir("ckpt"))
+      q.stop()
+      assert(spark.conf.getAll.get(key) == v, s"caller's setting $v became ${spark.conf.getAll.get(key)}")
+    } finally set(original)
   }
 
   test("storeStats: per-layer counts, freshest ts, and extent union over WKB") {
