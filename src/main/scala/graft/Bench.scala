@@ -4,44 +4,20 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session()
-    // Optional args = query-name filter (local profiling; the driver
-    // passes none and gets the full suite).
-    val only = args.toSet
     Harness.warm(spark)
-    // Fixture materialization for the file-format scans: the .shp/.dbf
-    // and .gpkg fixtures are written once per JVM on first use; inside
-    // the timed query that charged ~1-2.5s of one-time collect+write
-    // cost to a1b/a1c's first pass. Building them here keeps the timed
-    // queries pure read-path. (Deliberately the ONE warmup that touches
-    // the sf dir: it pre-reads only the events table to write a
-    // DIFFERENT-format file — the timed work being measured is the
-    // byte-level .shp/.gpkg parse, which no warmup touches.)
-    // r17: widened from shp+gpkg to EVERY fixture format — the driver
-    // regenerates testdata each round, so at round start all 17 fixtures
-    // are stale and each format's first timed query used to eat its
-    // one-time collect+write (0.3-1.3 s each; see OPTIMIZATION_r17.md,
-    // measurement fix per guide §1.4).
-    try {
-      graft.operators.TierA.allFixtures(spark, sfDir)
-      // the three derived LAYOUTS with the same once-per-JVM mtime-keyed
-      // pattern: bucketed join tables (b124/b124b), the partition-pruned
-      // events dir (b125), and the saved IVF-PQ index whose probe query
-      // is declared build-once/probe-many (c3_ivfpq_prebuilt) — each
-      // first timed query otherwise eats the one-time write
-      graft.operators.TierB.bucketedTables(spark, sfDir)
-      graft.operators.TierB.partitionedEvents(spark, sfDir)
-      graft.operators.TierCSim.ivfPqIndexFixture(spark, sfDir)
-    } catch { case e: Throwable => System.err.println(s"[bench] warmup: ${e.getMessage}") }
+    Harness.fixtures(spark, sfDir)
     // Failed queries report -1.0 (never a silently-timed crash) so the
     // driver can distinguish "fast" from "broken"; errors go to stderr.
-    // Timed region = build + count() + CapStats.await() (see Harness.run);
-    // the cache release between queries is untimed.
+    // Timed region = build + count() + the ledger's deferred counts
+    // (CacheRegistry.await, see Harness.run); the release between queries
+    // is untimed.
     def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val o = Harness.run(spark, name)(fn(spark, sfDir).count())
       if (o.ok) o.secs else -1.0
     }
-    val declared = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
+    // optional args = query-name filter (local profiling; none = the full
+    // suite)
+    val declared = Harness.select(args.toSeq).map(q => q.name -> q.fn)
     val pass1 = declared.map { case (name, fn) => name -> timed(name, fn) }
     // This host shows multi-minute noisy-neighbor stall windows (steal
     // time): back-to-back identical runs measured 3.7 s vs 24 s for the

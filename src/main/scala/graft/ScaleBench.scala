@@ -13,7 +13,6 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ScaleBench <sfDir> <query> [query...]")
     val sfDir = args.head
-    val names = args.tail.toSeq
     // At soak scale the per-partition volume, not the operator, is what
     // bench-posture partitions get wrong — a real cluster sizes partition
     // count with the data (PLANS.md C7). Default cpus: pass
@@ -23,13 +22,11 @@ object ScaleBench {
     // no fixture writers: their driver-side collect caps are deliberately
     // too small for soak-scale events
     Harness.warm(spark)
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     // min-of-k (SPARK_GRAFT_REPEAT, default 1): the r14 c2_dedup_near
     // episode — a neighbor query's cache pressure inflated one point
     // 6× — is exactly what a min-of-2 makes impossible to misread
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "1").toInt
-    names.foreach { name =>
+    Harness.select(args.tail.toSeq).foreach { case QuerySpec(name, _, _, fn) =>
       // default action is count() — comparable with Bench and every
       // prior soak row, but the optimizer PRUNES deterministic
       // projection columns under it (measured r17: a11ax at sf1 is
@@ -38,7 +35,7 @@ object ScaleBench {
       // SPARK_GRAFT_EVAL=full forces full row evaluation via the
       // executed plan's RDD — use it when soaking map-side compute.
       def once() = Harness.run(spark, name) {
-        val df = SparkEntry.queries(name)(spark, sfDir)
+        val df = fn(spark, sfDir)
         if (sys.env.get("SPARK_GRAFT_EVAL").contains("full")) df.queryExecution.toRdd.count()
         else df.count()
       }

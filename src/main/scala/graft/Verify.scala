@@ -5,8 +5,6 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // extra args = query-name filter (local iteration; driver passes none)
-    val only = args.drop(2).toSet
     val spark = Harness.session()
     // Oracle-type lint (loud, non-fatal here so one bad SQL can't zero the
     // whole round's dump; OracleLintSpec turns the same check into a hard
@@ -16,16 +14,10 @@ object Verify {
       System.err.println(s"[verify][lint] $name: uncast window SUM (DuckDB HUGEINT) near: $snip")
     }
     new java.io.File(outDir).mkdirs()
-    // A typo'd --only name would otherwise yield a clean '{declared: 0,
-    // written: 0}' — the silent-absence class this block exists to catch.
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    if (unknown.nonEmpty)
-      System.err.println(s"[verify] WARNING: --only names match no registered " +
-        s"query: ${unknown.toSeq.sorted.mkString(", ")}")
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
+    // extra args = query-name filter (local iteration; none = every query)
+    val selected = Harness.select(args.drop(2).toSeq)
     // a failed query is logged by Harness.run and left out of `written`
-    val written = selected.count { case (name, fn) =>
+    val written = selected.count { case QuerySpec(name, _, _, fn) =>
       Harness.run(spark, name) {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }.ok

@@ -730,17 +730,12 @@ object Multimodal {
   }
   /** dHash near-dup candidate pairs (shared by [[c6h]] and the cluster
     * rollup [[c6i]]): banded bucket join under the cap, Hamming ≤ 6.
-    * The RESULT is memo-persisted per (session, dir): c6h and c6i in one
-    * session share a single cached pair frame (and the single cached hash
-    * frame under it) instead of stacking identical lineages in executor
-    * memory — the memo lives one CacheRegistry release epoch.
+    * The result and the hash frame under it are persisted for the
+    * query's lifetime ([[graft.CacheRegistry]]).
     */
-  private[operators] def dHashPairs(s: SparkSession, d: String): DataFrame =
-    graft.CacheRegistry.memoPersist(s, s"dhash_pairs:$d") { dHashPairsBuild(s, d) }
-
-  private def dHashPairsBuild(s: SparkSession, d: String): DataFrame = {
+  private[operators] def dHashPairs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val hashes = graft.CacheRegistry.memoPersist(s, s"dhash_hashes:$d")(
+    val hashes = graft.CacheRegistry.persist(
       mediaRecords(s, d)
         .filter(_.payload.nonEmpty)
         .mapPartitions(_.map(r => (r.media_id, DHash.dHash(r.payload))))
@@ -751,14 +746,15 @@ object Multimodal {
     val ok = e.groupBy($"band", $"bv").agg(count(lit(1)).as("n"))
       .filter($"n" <= DHashBucketCap).select($"band", $"bv")
     val kept = e.join(ok, Seq("band", "bv"))
-    kept.select($"band", $"bv", $"doc_id".as("id_a"), $"h".as("ha"))
+    graft.CacheRegistry.persist(kept
+      .select($"band", $"bv", $"doc_id".as("id_a"), $"h".as("ha"))
       .join(kept.select($"band", $"bv", $"doc_id".as("id_b"), $"h".as("hb")),
         Seq("band", "bv"))
       .filter($"id_a" < $"id_b")
       .select($"id_a", $"id_b", $"ha", $"hb").distinct()
       .withColumn("ham", bit_count($"ha".bitwiseXOR($"hb")).cast(LongType))
       .filter($"ham" <= 6)
-      .select($"id_a", $"id_b", $"ham")
+      .select($"id_a", $"id_b", $"ham"))
   }
 
   private val c6h = QuerySpec(

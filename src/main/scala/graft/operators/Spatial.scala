@@ -1821,7 +1821,7 @@ object Spatial {
     QuerySpec(
       "a11ai_buffer_concave",
       s"Concave-polygon Euclidean buffer (r=$r) on the exact 8.0 dissolve grid: per-event reflex L-shapes (bufferSquare rejects them) probed per cell by the generic ray cast + boundary-distance chains, one distinct-count shuffle per group — union cell count + envelope; oracle replays rectangle-minus-notch containment and the six point-segment clamp chains.",
-      Some(s"""WITH e AS (SELECT user_id % 25 AS gid,
+      Some(s"""WITH e AS (SELECT DISTINCT user_id % 25 AS gid,
              |    2*CAST(user_id % 100 AS DOUBLE) AS ox, value % 200.0 AS oy FROM events),
              |rng AS (SELECT gid, ox, oy,
              |    CAST(floor((ox - $r) / 8.0) AS BIGINT) AS i0,

@@ -70,8 +70,8 @@ object TierCSim {
     */
   private def headCapKept(ranked: DataFrame, cap: Int, tag: String): DataFrame = {
     import ranked.sparkSession.implicits._
-    // async audit count (r18): overlaps the caller's planning/main action;
-    // awaited before any stats read or cache sweep — see dfCapKept
+    // deferred audit count (r18): runs on the query's ledger after the
+    // main action, before its caches are released — see dfCapKept
     graft.CapStats.recordDeferred(tag)(ranked.filter($"hrank" > cap).count()) { dropped =>
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"$tag: occupancy cap $cap dropped $dropped candidate rows beyond the " +
@@ -442,14 +442,11 @@ object TierCSim {
     // change at ten call sites
     val tag = warnMsg(0L).takeWhile(_ != ':')
     // r18: the hot-key counts are audit side-channels (no result depends on
-    // them) but used to run as eager driver-blocking jobs here, serialized
-    // BEFORE the caller's main action was even planned — and each forced
-    // the full cache build as its own up-front job. recordDeferred runs
-    // them at CacheRegistry.releaseAll / first CapStats read instead:
-    // post-action, as a cheap scan of the by-then-materialized cache. The
-    // no-silent-caps contract (count always computed, recorded, WARNed
-    // before stats or results are observable) is unchanged; see CapStats
-    // for why deferred beats concurrent (cache-build double-compute race).
+    // them); recordDeferred puts them on the query's ledger, which runs
+    // them post-action as a cheap scan of the by-then-materialized cache
+    // and before the release. The no-silent-caps contract (count always
+    // computed, recorded, WARNed before stats or results are observable)
+    // is unchanged; CacheRegistry says why deferred and not concurrent.
     if (hotPreFilter) {
       val hot = CacheRegistry.persist(exploded
         .groupBy(keys: _*).agg(count(lit(1)).as("df"))

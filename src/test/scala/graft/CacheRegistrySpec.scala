@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the caller-owned cache contract ([[CacheRegistry]]): operator
@@ -46,10 +47,27 @@ class CacheRegistrySpec extends AnyFunSuite {
     val e = intercept[RuntimeException](CacheRegistry.releaseAll())
     assert(e.getMessage.contains("spec_count_fails"), e.getMessage)
     assert(CacheRegistry.registeredCount == 0, "a failed count must not skip the unpersist")
-    assert(CapStats.pendingCount == 0, "a failed count must not leave later counts pending")
+    assert(CacheRegistry.pendingCount == 0, "a failed count must not leave later counts pending")
     assert(ran == 1, "the count queued after the failing one must still run")
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"net-new persisted RDDs after a failed releaseAll: $leaked")
+    CapStats.clear()
+  }
+
+  test("releaseAll runs a deferred count while the frame it scans is still persisted") {
+    import spark.implicits._
+    CacheRegistry.releaseAll()
+    val frame = CacheRegistry.persist(Seq(1, 2, 3).toDF("x"))
+    frame.count()
+    var levelAtCount = StorageLevel.NONE
+    CapStats.recordDeferred("spec_count_order") {
+      levelAtCount = frame.storageLevel
+      frame.filter($"x" > 1).count()
+    }(_ => ())
+    CacheRegistry.releaseAll()
+    assert(levelAtCount != StorageLevel.NONE, "the count ran after its frame was released")
+    assert(frame.storageLevel == StorageLevel.NONE, "releaseAll must release the frame after the count")
+    assert(CapStats.lastDrop("spec_count_order").contains(2L))
     CapStats.clear()
   }
 }

@@ -61,7 +61,7 @@ class HarnessSpec extends AnyFunSuite {
     val failure = a.result.left.toOption.getOrElse(fail("query A must fail"))
     val described = Harness.describe(failure)
     assert(described.contains("spec_query_a") && described.contains("spec_cap_a"), described)
-    assert(countRuns == 1 && CapStats.pendingCount == 0,
+    assert(countRuns == 1 && CacheRegistry.pendingCount == 0,
       "A's count runs in A's release, not in the next query")
     assert(a.secs < 3.0, s"the release is untimed, yet A took ${a.secs} s")
     assert(CacheRegistry.registeredCount == 0)
@@ -69,7 +69,7 @@ class HarnessSpec extends AnyFunSuite {
     val b = Harness.run(spark, "spec_query_b")(simhash())
     assert(b.result == alone.result, s"B after A: ${b.result}, alone: ${alone.result}")
     assert(CacheRegistry.registeredCount == 0)
-    assert(CapStats.pendingCount == 0)
+    assert(CacheRegistry.pendingCount == 0)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
     assert(leaked.isEmpty, s"net-new persisted RDDs after A and B: $leaked")
   }
@@ -96,6 +96,19 @@ class HarnessSpec extends AnyFunSuite {
     val before = warmDirs()
     Harness.warm(spark)
     assert(warmDirs().diff(before).isEmpty, warmDirs().diff(before))
+  }
+
+  test("select returns the named queries in name order and names the unknown ones on stderr") {
+    val buf = new java.io.ByteArrayOutputStream()
+    val err = System.err
+    System.setErr(new java.io.PrintStream(buf, true))
+    val picked =
+      try Harness.select(Seq("c2_simhash", "spec_no_such_query", "b11_agg_groupby", "c2_hitz"))
+      finally System.setErr(err)
+    assert(picked.map(_.name) == Seq("b11_agg_groupby", "c2_simhash"))
+    assert(buf.toString.contains("[harness] unknown query names: c2_hitz, spec_no_such_query"),
+      buf.toString)
+    assert(Harness.select(Nil).map(_.name) == Registry.all.map(_.name).sorted)
   }
 
   test("jsonString round-trips quotes, backslashes and control chars") {
