@@ -87,14 +87,15 @@ object Harness {
       spark.range(256).select(geo($"id".cast("double"), $"id".cast("double"))).count()
     } catch { case e: Throwable => System.err.println(s"[harness] warmup: ${describe(e)}") }
 
-  /** Untimed fixture build: the file-format fixtures and derived layouts
-    * are written once per JVM on first use, and inside a timed query that
-    * one-time collect+write (0.3-2.5 s each) lands on the format's first
-    * query. The one warm-up that touches the sf dir: it pre-reads tables
-    * only to write DIFFERENT files, so no timed read path is pre-warmed.
-    * Fixtures are keyed by the tables' mtimes, so after the test data is
-    * regenerated every one of them is stale. A failure is logged, not
-    * thrown.
+  /** Untimed fixture build: every file-format fixture and derived layout
+    * is built on first use of its source version ([[Fixture]]), and inside
+    * a timed query that one-time collect+write (0.3-2.5 s each) lands on
+    * the format's first query. The one warm-up that touches the sf dir: it
+    * pre-reads tables only to write DIFFERENT files, so no timed read path
+    * is pre-warmed. A fixture's name carries its source tables' mtime, so
+    * after the test data is regenerated every one of them is rebuilt here;
+    * a current one costs one mtime walk and one `exists`. A failure is
+    * logged, not thrown.
     */
   def fixtures(spark: SparkSession, sfDir: String): Unit =
     try {
@@ -121,7 +122,7 @@ object Harness {
     Registry.all.filter(q => wanted.isEmpty || wanted(q.name)).sortBy(_.name)
   }
 
-  private def deleteTree(root: Path): Unit =
+  private[graft] def deleteTree(root: Path): Unit =
     Using.resource(Files.walk(root))(
       _.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p)))
 

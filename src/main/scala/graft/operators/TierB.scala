@@ -5743,8 +5743,9 @@ object TierB {
     * Scale shape: the write and the read-back are both per-partition
     * parallel (every Spark format sink/source is); the fingerprint is one
     * partial-agg rollup per format plus one distinct-key shuffle. The temp
-    * landing dir is keyed by the input dir and overwritten per run, so
-    * repeated Verify/Bench invocations don't accrete files.
+    * landing dir is one per session ([[graft.Fixture.sessionDir]]),
+    * overwritten per run and deleted when the JVM exits, so repeated
+    * Verify/Bench invocations don't accrete files.
     */
   private val b120 = QuerySpec(
     "b120_format_roundtrip",
@@ -5768,15 +5769,10 @@ object TierB {
         floor($"l_quantity").cast(LongType).as("qty_l"),
         floor($"l_extendedprice" * 100.0).cast(LongType).as("price_e2"))
       val schema = base.schema
-      // deterministic landing dir per (input dir, session): the applicationId
-      // component keeps two concurrent sessions verifying the same dataset
-      // from racing each other's overwrite/re-read cycle; Overwrite keeps
-      // same-session reruns clean
-      val land = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_b120_" + java.security.MessageDigest.getInstance("MD5")
-          .digest((d + "|" + s.sparkContext.applicationId).getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(12))
-        .getAbsolutePath
+      // one landing dir per (input dir, session): two concurrent sessions
+      // verifying the same dataset never race each other's overwrite/re-read
+      // cycle; Overwrite keeps same-session reruns clean
+      val land = graft.Fixture.sessionDir(s, "b120", d)
       base.write.mode("overwrite").orc(s"$land/orc")
       base.write.mode("overwrite").option("header", "true").csv(s"$land/csv")
       base.write.mode("overwrite").json(s"$land/json")
@@ -6139,47 +6135,30 @@ object TierB {
     * hash-identical to the plain join (the oracle IS the unbucketed
     * formulation — co-location must never change semantics).
     */
-  /** Build (once per JVM per sf-dir) the bucketed+sorted orders/customer
-    * tables b124/b124b ride; returns their names. Clears both catalog
-    * metadata and a prior JVM's stale managed location (the warehouse
-    * dir outlives the session — CREATE TABLE AS would refuse with
-    * LOCATION_ALREADY_EXISTS otherwise).
+  /** Build (once per session and source version) the bucketed+sorted
+    * orders/customer tables b124/b124b ride; returns their names. The
+    * names carry the [[graft.Fixture.version]] of orders and customer, so
+    * regenerating the sf data at the same path names new tables. A build
+    * clears the managed locations of every version of these tables for
+    * this sf dir (the warehouse dir outlives the session — CREATE TABLE AS
+    * would refuse with LOCATION_ALREADY_EXISTS otherwise).
     */
-  /** Latest mtime under one sf-dir table — the same freshness key the
-    * TierA fixture writers use: regenerating the sf data at the same path
-    * (easy with ScaleGen's skew/noise modes) must rebuild the derived
-    * layouts, or the engine serves stale bytes while the oracle reads the
-    * new parquet (spurious hash mismatches).
-    */
-  private def sourceMtime(d: String, table: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory)
-        (f.lastModified +: f.listFiles().toSeq.map(walk)).max
-      else f.lastModified
-    val p = new java.io.File(d, s"$table.parquet")
-    if (p.exists()) walk(p) else 0L
-  }
-
   private[graft] def bucketedTables(s: SparkSession, d: String): (String, String) = {
     import s.implicits._
-    val suffix = java.lang.Integer.toHexString(d.hashCode)
-    val (to, tc) = (s"graft_bkt_orders_$suffix", s"graft_bkt_customer_$suffix")
-    // freshness marker: catalog existence alone served stale buckets when
-    // the sf dir was regenerated at the same path (the TierA mtime rule)
-    val marker = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_bkt_marker_$suffix")
-    val srcMtime = math.max(sourceMtime(d, "orders"), sourceMtime(d, "customer"))
-    TierB.synchronized {
-      if (!s.catalog.tableExists(to) || !s.catalog.tableExists(tc) ||
-          !marker.exists() || marker.lastModified < srcMtime) {
+    val version = graft.Fixture.version(d, "orders", "customer")
+    val (to, tc) = (s"graft_bkt_orders_$version", s"graft_bkt_customer_$version")
+    graft.Fixture.locked {
+      if (!s.catalog.tableExists(to) || !s.catalog.tableExists(tc)) {
         s.sql(s"DROP TABLE IF EXISTS $to")
         s.sql(s"DROP TABLE IF EXISTS $tc")
-        val wh = s.conf.get("spark.sql.warehouse.dir")
-        Seq(to, tc).foreach { t =>
-          val p = new org.apache.hadoop.fs.Path(wh, t)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) fs.delete(p, true)
-        }
+        val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
+        val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
+        val hash = version.takeWhile(_ != '_') // every version for this sf dir
+        if (fs.exists(wh))
+          fs.listStatus(wh).map(_.getPath)
+            .filter(p => Seq("orders", "customer")
+              .exists(t => p.getName.startsWith(s"graft_bkt_${t}_${hash}_")))
+            .foreach(fs.delete(_, true))
         // repartition on the SAME hash the bucketing uses → exactly one
         // file per bucket; Spark propagates a bucket's sort order ONLY
         // in the one-file case, and that propagation is what elides the
@@ -6192,8 +6171,6 @@ object TierB {
           .repartition(8, $"c_custkey")
           .write.mode("overwrite").format("parquet")
           .bucketBy(8, "c_custkey").sortBy("c_custkey").saveAsTable(tc)
-        marker.delete()
-        java.nio.file.Files.createFile(marker.toPath)
       }
     }
     // Spark 3+ stopped propagating sorted-bucket file order by default;
@@ -6243,9 +6220,8 @@ object TierB {
             GROUP BY o_custkey ORDER BY o_custkey"""),
     (s, d) => {
       import s.implicits._
-      bucketedTables(s, d) // ensure the fixture exists
-      val suffix = java.lang.Integer.toHexString(d.hashCode)
-      s.table(s"graft_bkt_orders_$suffix")
+      val (to, _) = bucketedTables(s, d)
+      s.table(to)
         .filter($"o_custkey".isin(1L, 5L, 11L))
         .groupBy($"o_custkey")
         .agg(count(lit(1)).as("n_orders"),
@@ -6286,23 +6262,14 @@ object TierB {
     }
   )
 
-  /** Write (once per JVM per sf-dir) the event_type-partitioned events
-    * layout b125 scans; returns the directory.
+  /** The event_type-partitioned events layout b125 scans (a
+    * [[graft.Fixture]]); returns the directory.
     */
-  private[graft] def partitionedEvents(s: SparkSession, d: String): String = {
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_part_events_" + Integer.toHexString(d.hashCode))
-    val marker = new java.io.File(dir, "_SUCCESS")
-    TierB.synchronized {
-      // same staleness rule as every TierA fixture: a marker alone served
-      // stale partitions when the sf data was regenerated at the same path
-      if (!marker.exists() || marker.lastModified < sourceMtime(d, "events")) {
-        Tables.events(s, d)
-          .write.mode("overwrite").partitionBy("event_type").parquet(dir.getPath)
-      }
+  private[graft] def partitionedEvents(s: SparkSession, d: String): String =
+    graft.Fixture(d, "part_events", "events") { dir =>
+      Tables.events(s, d)
+        .write.mode("overwrite").partitionBy("event_type").parquet(dir.getPath)
     }
-    dir.getPath
-  }
 
   val specs: Seq[QuerySpec] = Seq(
     b110, b111, b112, b113, b114, b115, b116, b117, b118, b119, b120, b121, b122, b123, b124, b124b, b125,

@@ -2493,27 +2493,13 @@ object TierCSim {
       }
       .start()
 
-  /** Build (once per JVM per sf-dir, embeddings-mtime-fresh) the saved
-    * IVF-PQ index `c3_ivfpq_prebuilt` probes; returns its directory.
+  /** The saved IVF-PQ index `c3_ivfpq_prebuilt` probes (a
+    * [[graft.Fixture]] over embeddings); returns its directory.
     */
-  private[graft] def ivfPqIndexFixture(s: SparkSession, d: String): String = {
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_ivfpq_index_" + Integer.toHexString(d.hashCode))
-    val ok = new java.io.File(new java.io.File(dir, "codes"), "_SUCCESS")
-    val srcMtime = {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory)
-          (f.lastModified +: f.listFiles().toSeq.map(walk)).max
-        else f.lastModified
-      val p = new java.io.File(d, "embeddings.parquet")
-      if (p.exists()) walk(p) else 0L
+  private[graft] def ivfPqIndexFixture(s: SparkSession, d: String): String =
+    graft.Fixture(d, "ivfpq_index", "embeddings") { dir =>
+      saveIvfPqIndex(s, Tables.embeddings(s, d), dir.getPath)
     }
-    TierCSim.synchronized {
-      if (!ok.exists() || ok.lastModified < srcMtime)
-        saveIvfPqIndex(s, Tables.embeddings(s, d), dir.getPath)
-    }
-    dir.getPath
-  }
 
   private val c3ipqp = QuerySpec(
     "c3_ivfpq_prebuilt",

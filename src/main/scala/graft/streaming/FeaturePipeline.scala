@@ -188,7 +188,7 @@ object FeaturePipeline {
   def decontamStream(docs: DataFrame, evalDocs: DataFrame,
       gramSize: Int): DataFrame = {
     val spark = evalDocs.sparkSession
-    // Driver-collect guard (the TierA.guardFixtureRows discipline): the
+    // Driver-collect guard (the Fixture.guardFixtureRows discipline): the
     // eval set is small BY NATURE, but a mispointed path — the training
     // corpus handed in as `evalDocs` — would OOM the driver silently.
     // Refuse loudly instead; the corpus-scale sweep is the batch operator.
