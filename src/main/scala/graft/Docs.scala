@@ -4,10 +4,13 @@ import java.nio.file.{Files, Paths}
 
 /** Regenerates OPERATORS.md — the user-facing operator reference,
   * derived from the single Registry definition site so it can never
-  * drift from the declared surface. Run: `sbt "runMain graft.Docs"`.
+  * drift from the declared surface. Run from the checkout root:
+  * `sbt "runMain graft.Docs"` (writes OPERATORS.md to the working
+  * directory).
   */
 object Docs {
-  def main(args: Array[String]): Unit = {
+  /** The whole of OPERATORS.md: one row per declared query, in name order. */
+  def render: String = {
     val out = new StringBuilder
     out ++= "# OPERATORS — declared query surface (generated by `graft.Docs`)\n\n"
     out ++= s"${Registry.all.size} declared queries; " +
@@ -20,7 +23,11 @@ object Docs {
       val o = if (q.oracle.nonEmpty) "yes" else "no"
       out ++= s"| `${q.name}` | $o | ${q.doc.replace("|", "\\|")} |\n"
     }
-    Files.writeString(Paths.get("/root/repo/OPERATORS.md"), out.toString)
+    out.toString
+  }
+
+  def main(args: Array[String]): Unit = {
+    Files.writeString(Paths.get("OPERATORS.md"), render)
     println(s"wrote OPERATORS.md (${Registry.all.size} rows)")
   }
 }

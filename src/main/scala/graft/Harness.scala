@@ -1,10 +1,15 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.util.Using
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ListenerBusBridge
 
 /** The one query lifecycle every main runs on: one session builder, one
   * warm-up, one fixture build, one query selector, and one per-query
@@ -25,6 +30,11 @@ import org.apache.spark.sql.SparkSession
   * registered is a leak: [[run]] reports it on stderr and on the outcome,
   * then unpersists it, so the next query starts clean and the defect
   * still shows.
+  *
+  * [[run]] is also the one source of per-query execution [[Counts]]: one
+  * listener per `SparkContext` bills every job submitted under a run's
+  * local property — the action, the deferred counts and the release — to
+  * that run, and nothing outside a run (warm-up, fixtures) is billed.
   */
 object Harness {
   /** Cores for `local[cpus]` and the shuffle partition count:
@@ -126,12 +136,66 @@ object Harness {
     Using.resource(Files.walk(root))(
       _.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p)))
 
-  /** One query's run: the seconds of its timed region, the action's value
-    * or the failure, named by query, and the number of persisted RDDs the
-    * query left behind after its release.
+  /** What one run's jobs did: the jobs it started and the stages of those
+    * jobs that ran (a skipped stage never completes), with their tasks, the
+    * tasks' summed run time, and their shuffle and spill bytes.
     */
-  final case class Outcome[A](secs: Double, result: Either[Throwable, A], leaked: Int) {
+  final case class Counts(jobs: Int = 0, stages: Int = 0, tasks: Int = 0, taskSecs: Double = 0.0,
+      shuffleReadBytes: Long = 0L, shuffleWriteBytes: Long = 0L, spillBytes: Long = 0L) {
+    def +(o: Counts): Counts = Counts(jobs + o.jobs, stages + o.stages, tasks + o.tasks,
+      taskSecs + o.taskSecs, shuffleReadBytes + o.shuffleReadBytes,
+      shuffleWriteBytes + o.shuffleWriteBytes, spillBytes + o.spillBytes)
+  }
+
+  /** One query's run: the seconds of its timed region, the action's value
+    * or the failure, named by query, the number of persisted RDDs the
+    * query left behind after its release, and its [[Counts]]. `counted` is
+    * false when the listener bus did not drain in time, so the counts may
+    * be short.
+    */
+  final case class Outcome[A](secs: Double, result: Either[Throwable, A], leaked: Int,
+      counts: Counts, counted: Boolean) {
     def ok: Boolean = result.isRight
+  }
+
+  /** The local property that names the run a job was submitted under. */
+  private val RunKey = "graft.harness.run"
+  private val BusWaitMs = 10000L
+  private val runIds = new AtomicLong()
+  /** The counts of every run in flight, by run id. */
+  private val running = new ConcurrentHashMap[String, Counts]()
+  /** The run each stage of a billed job belongs to. */
+  private val stageRun = new ConcurrentHashMap[Int, String]()
+  private var listening: SparkContext = _
+
+  private object Counter extends SparkListener {
+    private def bill(run: String, c: Counts): Unit =
+      running.computeIfPresent(run, (_: String, acc: Counts) => acc + c)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(RunKey)))
+        .filter(running.containsKey).foreach { run =>
+          e.stageIds.foreach(stageRun.put(_, run))
+          bill(run, Counts(jobs = 1))
+        }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val s = e.stageInfo
+      Option(stageRun.get(s.stageId)).foreach { run =>
+        val m = s.taskMetrics
+        bill(run, Counts(stages = 1, tasks = s.numTasks, taskSecs = m.executorRunTime / 1e3,
+          shuffleReadBytes = m.shuffleReadMetrics.totalBytesRead,
+          shuffleWriteBytes = m.shuffleWriteMetrics.bytesWritten,
+          spillBytes = m.memoryBytesSpilled + m.diskBytesSpilled))
+      }
+    }
+  }
+
+  /** Installs [[Counter]] once per `SparkContext`, in [[run]] rather than
+    * in [[session]], so a session built elsewhere is counted too.
+    */
+  private def listen(sc: SparkContext): Unit = synchronized {
+    if (listening ne sc) { sc.addSparkListener(Counter); listening = sc }
   }
 
   /** Run one self-contained query. Times `action` plus `CacheRegistry.await()`
@@ -141,29 +205,44 @@ object Harness {
     * to the outcome as a failure and never thrown past the query, so the
     * next query starts with no registered frame and no pending count.
     * Every failure, and every leaked RDD (see the object doc), is logged to
-    * stderr.
+    * stderr. The jobs of the action, the awaits and the release are billed
+    * to this run's [[Counts]], read after a bounded wait for the listener
+    * bus; a wait that times out is logged and marks the outcome.
     */
   def run[A](spark: SparkSession, name: String)(action: => A): Outcome[A] = {
     val sc = spark.sparkContext
+    listen(sc)
+    val runId = runIds.incrementAndGet().toString
+    running.put(runId, Counts())
     val before = sc.getPersistentRDDs.keySet
-    val t0 = System.nanoTime()
-    val timed: Either[Throwable, A] =
-      try { val a = action; CacheRegistry.await(); Right(a) }
-      catch { case e: Throwable => Left(new RuntimeException(s"query '$name' failed: ${describe(e)}", e)) }
-    val secs = (System.nanoTime() - t0) / 1e9
-    // strong references: the ContextCleaner must not drop a leaked RDD
-    // before it is counted
-    val held = sc.getPersistentRDDs
-    // queries are self-contained: a frame persisted by one query must not
-    // squeeze executor memory (or appear as an InMemoryRelation) in the next
-    val result =
-      try { try CacheRegistry.releaseAll() finally spark.catalog.clearCache(); timed }
-      catch { case e: Throwable =>
-        timed match {
-          case Left(f) => f.addSuppressed(e); timed
-          case Right(_) => Left(new RuntimeException(s"query '$name' release failed: ${describe(e)}", e))
-        }
-      }
+    sc.setLocalProperty(RunKey, runId)
+    val (secs, result, held) =
+      try {
+        val t0 = System.nanoTime()
+        val timed: Either[Throwable, A] =
+          try { val a = action; CacheRegistry.await(); Right(a) }
+          catch { case e: Throwable => Left(new RuntimeException(s"query '$name' failed: ${describe(e)}", e)) }
+        val secs = (System.nanoTime() - t0) / 1e9
+        // strong references: the ContextCleaner must not drop a leaked RDD
+        // before it is counted
+        val held = sc.getPersistentRDDs
+        // queries are self-contained: a frame persisted by one query must not
+        // squeeze executor memory (or appear as an InMemoryRelation) in the next
+        val result =
+          try { try CacheRegistry.releaseAll() finally spark.catalog.clearCache(); timed }
+          catch { case e: Throwable =>
+            timed match {
+              case Left(f) => f.addSuppressed(e); timed
+              case Right(_) => Left(new RuntimeException(s"query '$name' release failed: ${describe(e)}", e))
+            }
+          }
+        (secs, result, held)
+      } finally sc.setLocalProperty(RunKey, null)
+    val counted = ListenerBusBridge.waitUntilEmpty(sc, BusWaitMs)
+    if (!counted)
+      System.err.println(s"[harness] query '$name': listener bus not drained in $BusWaitMs ms, counts may be short")
+    val counts = running.remove(runId)
+    stageRun.values.removeIf(_ == runId)
     result.left.foreach(f => System.err.println(s"[harness] ${describe(f)}"))
     val leaked = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }.values
     java.lang.ref.Reference.reachabilityFence(held)
@@ -171,7 +250,7 @@ object Harness {
       System.err.println(s"[harness] query '$name' left ${leaked.size} persisted RDDs")
       leaked.foreach(_.unpersist(blocking = false))
     }
-    Outcome(secs, result, leaked.size)
+    Outcome(secs, result, leaked.size, counts, counted)
   }
 
   /** A failure as one line: its message (its class when it has none),

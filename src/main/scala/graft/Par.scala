@@ -8,16 +8,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * barrier every iterative loop goes through.
   */
 object Par {
-  private val SpreadMaxBytes: Long =
-    sys.env.get("SPARK_GRAFT_SPREAD_MAX_BYTES").map { s =>
-      // a malformed value must name the env var, not surface as an
-      // ExceptionInInitializerError far from the cause (ADVICE r17)
-      try s.trim.toLong
-      catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_SPREAD_MAX_BYTES must be a byte count, got '$s'")
-      }
-    }.getOrElse(256L << 20)
+  private val SpreadMaxBytes: Long = 256L << 20
 
   /** Scan-parallelism repair for unsplittable inputs (optimization guide
     * §2.5): parquet is split at ROW-GROUP granularity, so a table written as
@@ -30,9 +21,9 @@ object Par {
     * It inserts a round-robin repartition to the session's default
     * parallelism ONLY when the input layout cannot feed the cores by itself:
     * strictly fewer input files than task slots AND a bounded input size
-    * (`SPARK_GRAFT_SPREAD_MAX_BYTES`, default 256 MiB — at that size the
-    * narrow-row exchange costs tens of milliseconds on local disk/memory,
-    * far below the serial compute it unlocks). At production scale either
+    * (256 MiB — at that size the narrow-row exchange costs tens of
+    * milliseconds on local disk/memory, far below the serial compute it
+    * unlocks). At production scale either
     * the file count already exceeds the slot count (identity — no exchange
     * is ever added) or the table is above the byte bound (identity — a
     * multi-GB repartition of a base table is a decision to make with

@@ -15,7 +15,7 @@ object ScaleBench {
     val sfDir = args.head
     // At soak scale the per-partition volume, not the operator, is what
     // bench-posture partitions get wrong — a real cluster sizes partition
-    // count with the data (PLANS.md C7). Default cpus: pass
+    // count with the data. Default cpus: pass
     // SPARK_GRAFT_SHUFFLE explicitly per soak point.
     val spark = Harness.session("spark.sql.shuffle.partitions" ->
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", Harness.cpus.toString))

@@ -2151,7 +2151,7 @@ object TierCSim {
     // Par.spread (r18, guide §2.5): the query side is a single-file scan —
     // the ADC stage (label-block join + m LUT lookups per pair + partial
     // top-k) runs ON the scan task, serializing the per-pair compute on
-    // one core (Profile: one 1.54 s job dominating the query). The spread
+    // one core (measured: one 1.54 s job dominating the query). The spread
     // is identity at production layouts.
     val q = (0 until m).foldLeft(
         graft.Par.spread(embeddings.select($"vec_id".as("id_a"), $"label", $"embedding"))) {

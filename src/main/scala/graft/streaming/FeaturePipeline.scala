@@ -212,21 +212,6 @@ object FeaturePipeline {
     docs.filter(cleanUdf(col("text")))
   }
 
-  /** Stream-stream interval enrichment join (the two-live-streams shape
-    * Structured Streaming bounds with dual watermarks): each observation
-    * joins every context row for the SAME layer whose timestamp falls in
-    * `[obs_ts - lookback, obs_ts]` — sensor readings enriched with the
-    * calibration/context feed that precedes them, both sides unbounded.
-    *
-    * State bound (the 100 TB property): the time-range predicate plus
-    * both watermarks lets Spark evict a context row as soon as no future
-    * observation could still match it (obs watermark has passed
-    * `ctx_ts + lookback`), so join state is O(lookback-window of the
-    * context stream per layer), never the stream's history.
-    *
-    * @param obs streaming frame with `layer`, `obs_ts`, observation cols
-    * @param ctx streaming frame with `ctx_layer`, `ctx_ts`, context cols
-    */
   /** Geofence alerting — the classic geo-stream monitoring stage: every
     * arriving point feature is tested against a STATIC fence table and
     * emits one alert row per fence it falls inside (all point columns +
@@ -631,6 +616,21 @@ object FeaturePipeline {
         col("sum_sq"), col("max_peak"), col("n_crossings"))
   }
 
+  /** Stream-stream interval enrichment join (the two-live-streams shape
+    * Structured Streaming bounds with dual watermarks): each observation
+    * joins every context row for the SAME layer whose timestamp falls in
+    * `[obs_ts - lookback, obs_ts]` — sensor readings enriched with the
+    * calibration/context feed that precedes them, both sides unbounded.
+    *
+    * State bound (the 100 TB property): the time-range predicate plus
+    * both watermarks lets Spark evict a context row as soon as no future
+    * observation could still match it (obs watermark has passed
+    * `ctx_ts + lookback`), so join state is O(lookback-window of the
+    * context stream per layer), never the stream's history.
+    *
+    * @param obs streaming frame with `layer`, `obs_ts`, observation cols
+    * @param ctx streaming frame with `ctx_layer`, `ctx_ts`, context cols
+    */
   def enrichStream(obs: DataFrame, ctx: DataFrame, lookbackSec: Int,
       watermark: String): DataFrame = {
     val o = obs.withWatermark("obs_ts", watermark)
@@ -1039,42 +1039,6 @@ object FeaturePipeline {
     }
   }
 
-  /** B33 on the Spark 4 arbitrary-state API: same running (count, max ts)
-    * per layer as [[runningLayerStats]], expressed as a StatefulProcessor
-    * with an explicit ValueState. Requires the RocksDB state-store
-    * provider (`spark.sql.streaming.stateStore.providerClass`).
-    */
-  class LayerStatsProcessor
-      extends StatefulProcessor[String, (String, Long), (String, Long, Long)] {
-    @transient private var state: ValueState[(Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[(Long, Long)](
-        "layerStats", Encoders.product[(Long, Long)], TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: String, rows: Iterator[(String, Long)],
-        timerValues: TimerValues): Iterator[(String, Long, Long)] = {
-      val (n0, mx0) = if (state.exists()) state.get() else (0L, Long.MinValue)
-      var n = n0
-      var mx = mx0
-      rows.foreach { case (_, ts) => n += 1; if (ts > mx) mx = ts }
-      state.update((n, mx))
-      Iterator((key, n, mx))
-    }
-  }
-
-  /** [[runningLayerStats]] re-expressed through `transformWithState`. */
-  def runningLayerStatsV2(features: DataFrame): Dataset[(String, Long, Long)] = {
-    val spark = features.sparkSession
-    import spark.implicits._
-    features
-      .select(col("layer"), unix_micros(col("event_ts")).as("ts_us"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new LayerStatsProcessor, TimeMode.None(), OutputMode.Update())
-  }
-
   /** Heartbeat monitor: per-layer EVENT-TIME TIMERS. Every arrival
     * re-arms the layer's timer at last_seen + gap; if the watermark then
     * passes that deadline with no newer feature, [[handleExpiredTimer]]
@@ -1109,10 +1073,6 @@ object FeaturePipeline {
       Iterator((key, lastSeenUs.get(), expiredTimerInfo.getExpiryTimeInMs()))
   }
 
-  /** Gap alerts over decoded features: (layer, last_seen_us, expiry_ms)
-    * once a layer is silent for `gapMs` of event time. `delay` is the
-    * watermark lateness bound of the source.
-    */
   /** Streaming trending top-k, stage 1: sliding-window counts per layer
     * under a watermark, APPEND mode — a window emits exactly once, when
     * the watermark closes it. The per-window rank cut cannot live in the
@@ -1167,6 +1127,10 @@ object FeaturePipeline {
       .select($"window.start".as("win_start"), $"layer", $"count", $"rank")
   }
 
+  /** Gap alerts over decoded features: (layer, last_seen_us, expiry_ms)
+    * once a layer is silent for `gapMs` of event time. `delay` is the
+    * watermark lateness bound of the source.
+    */
   def heartbeatAlerts(features: DataFrame, gapMs: Long,
       delay: String = "0 seconds"): Dataset[(String, Long, Long)] = {
     val spark = features.sparkSession

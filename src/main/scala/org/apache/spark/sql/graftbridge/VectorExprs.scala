@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   * not expression-tree literals: r7 embedded them as case-class fields,
   * which serialized the full matrix into every task binary and printed
   * hundreds of numbers per plan node (`graft_pq_dists(..., 250 more
-  * fields)` in PLANS.md). A broadcast keeps the plan node O(1) — it
+  * fields)` in the explained plan). A broadcast keeps the plan node O(1) — it
   * prints as `Broadcast(id)` — ships the payload once per executor via
   * torrent instead of once per task, and scales to codebooks far larger
   * than a plan literal should carry. Expressions read it through a

@@ -9,10 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the one query lifecycle ([[Harness.run]]): every query's caches
   * and deferred cap counts are released after it, a failure — the
-  * action's or the release's — stays with the query that caused it, a
-  * persisted RDD nobody registered is reported and dropped, no main builds
-  * its own session, no code outside [[Par.barrier]] checkpoints and no
-  * operator keys a fixture outside [[Fixture]].
+  * action's or the release's — and its jobs stay with the query that
+  * caused it, a persisted RDD nobody registered is reported and dropped,
+  * no main builds its own session or installs a listener, no code outside
+  * [[Par.barrier]] checkpoints and no operator keys a fixture outside
+  * [[Fixture]].
   */
 class HarnessSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.session
@@ -21,6 +22,10 @@ class HarnessSpec extends AnyFunSuite {
     val docs = graft.sources.Tables.documents(spark, SparkFixture.sfDir)
     graft.operators.TierCSim.simhashPairs(spark, docs, 3).count()
   }
+
+  /** The parts of a run's counts that do not depend on timing. */
+  private def shape(c: Harness.Counts) =
+    (c.jobs, c.stages, c.tasks, c.shuffleReadBytes, c.shuffleWriteBytes, c.spillBytes)
 
   test("run releases on success and on failure") {
     import spark.implicits._
@@ -40,20 +45,41 @@ class HarnessSpec extends AnyFunSuite {
     assert(leaked.isEmpty, s"net-new persisted RDDs after run: $leaked")
   }
 
+  test("run bills each query its own jobs, stages and tasks") {
+    val sc = spark.sparkContext
+    sc.parallelize(1 to 8, 8).count() // outside any run: billed to no query
+    val three = Harness.run(spark, "spec_three_jobs") {
+      (1 to 3).foreach(_ => sc.parallelize(1 to 10, 2).count())
+    }
+    val shuffle = Harness.run(spark, "spec_one_shuffle") {
+      sc.parallelize(1 to 100, 4).map(x => (x % 3, 1)).reduceByKey(_ + _, 2).collect()
+    }
+    assert(three.counted && shuffle.counted)
+    val t = three.counts
+    assert((t.jobs, t.stages, t.tasks, t.shuffleWriteBytes) == (3, 3, 6, 0L), t)
+    val s = shuffle.counts
+    assert((s.jobs, s.stages, s.tasks) == (1, 2, 6), s)
+    assert(s.shuffleWriteBytes > 0 && s.shuffleReadBytes > 0 && s.taskSecs > 0, s)
+  }
+
   test("a failing cap-bearing query leaves the next query unaffected") {
     import spark.implicits._
     CacheRegistry.releaseAll()
+    // first-read work (schema, codegen) stays out of both measured runs
+    Harness.run(spark, "spec_b_warm")(simhash())
     val alone = Harness.run(spark, "spec_b_alone")(simhash())
     assert(alone.ok, alone.result)
     val before = spark.sparkContext.getPersistentRDDs.keySet
 
-    // query A: a persisted frame, a deferred count that fails slowly, and
-    // an action that fails before the count could run in the timed region
+    // query A: a persisted frame, a deferred count that runs one 7-task
+    // job and then fails slowly, and an action that fails before the count
+    // could run in the timed region
     var countRuns = 0
     val a = Harness.run(spark, "spec_query_a") {
-      CacheRegistry.persist(Seq(1, 2).toDF("x")).count()
+      CacheRegistry.persist(Seq(1, 2).toDF("x"))
       CapStats.recordDeferred("spec_cap_a") {
         countRuns += 1
+        spark.sparkContext.parallelize(1 to 7, 7).count()
         Thread.sleep(3000)
         throw new IllegalStateException("count boom")
       }(_ => ())
@@ -66,9 +92,13 @@ class HarnessSpec extends AnyFunSuite {
       "A's count runs in A's release, not in the next query")
     assert(a.secs < 3.0, s"the release is untimed, yet A took ${a.secs} s")
     assert(CacheRegistry.registeredCount == 0)
+    assert(a.counted && (a.counts.jobs, a.counts.stages, a.counts.tasks) == (1, 1, 7),
+      s"A's release-time count job is billed to A: ${a.counts}")
 
     val b = Harness.run(spark, "spec_query_b")(simhash())
     assert(b.result == alone.result, s"B after A: ${b.result}, alone: ${alone.result}")
+    assert(b.counted && shape(b.counts) == shape(alone.counts),
+      s"B after A: ${b.counts}, alone: ${alone.counts}")
     assert(CacheRegistry.registeredCount == 0)
     assert(CacheRegistry.pendingCount == 0)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
@@ -128,7 +158,8 @@ class HarnessSpec extends AnyFunSuite {
     // freshness and tmpdir placement belong to graft.Fixture alone
     val rules: Seq[(Path => Boolean, String => Boolean)] = Seq(
       (_ == root.resolve("graft/Harness.scala"),
-        l => l.contains("SparkSession.builder") || l.contains("\"SPARK_GRAFT_CPUS\"")),
+        l => l.contains("SparkSession.builder") || l.contains("\"SPARK_GRAFT_CPUS\"") ||
+          l.contains("addSparkListener")),
       (_ == root.resolve("graft/Par.scala"), l => checkpoint.matches(l)),
       (!_.startsWith(operators), l => l.contains("lastModified") || l.contains("java.io.tmpdir")))
     val offenders = Files.walk(root).iterator.asScala

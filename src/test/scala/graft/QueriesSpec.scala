@@ -17,6 +17,16 @@ class QueriesSpec extends AnyFunSuite {
     assert(Registry.all.map(_.name).distinct.size == Registry.all.size)
   }
 
+  test("the committed OPERATORS.md is Docs.render (regenerate: runMain graft.Docs)") {
+    val committed = java.nio.file.Files.readString(java.nio.file.Paths.get("OPERATORS.md"))
+    val rendered = Docs.render
+    if (committed != rendered) {
+      val (c, r) = committed.linesIterator.zipAll(rendered.linesIterator, "<end>", "<end>")
+        .find { case (c, r) => c != r }.getOrElse(("<same lines>", "<same lines>"))
+      fail(s"OPERATORS.md is stale: first difference, committed '$c' vs rendered '$r'")
+    }
+  }
+
   test("every declared query executes on sf0.001") {
     Registry.all.foreach { q =>
       val n = q.fn(spark, sf).count()

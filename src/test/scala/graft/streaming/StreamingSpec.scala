@@ -1211,35 +1211,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("B33 v2: transformWithState StatefulProcessor accumulates across batches (RocksDB store)") {
-    val orig = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val (ms, transport) = newStream()
-    val stats = FeaturePipeline.runningLayerStatsV2(
-      FeaturePipeline.decode(transport.read(spark)))
-    val q = stats.toDF("layer", "n", "max_ts_us").writeStream
-      .outputMode(OutputMode.Update)
-      .format("memory").queryName("stats2_sink")
-      .option("checkpointLocation", tmpDir("ckpt")).start()
-    try {
-      ms.addData(wire("roads", "r1", 1000000L), wire("roads", "r2", 3000000L))
-      q.processAllAvailable()
-      ms.addData(wire("roads", "r3", 2000000L))
-      q.processAllAvailable()
-      val rows = spark.table("stats2_sink").collect()
-        .filter(_.getString(0) == "roads").sortBy(_.getLong(1))
-      assert(rows.last.getLong(1) == 3L, "running count did not accumulate")
-      assert(rows.last.getLong(2) == 3000000L, "max ts wrong")
-    } finally {
-      q.stop()
-      orig match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("heartbeat timers: a silent layer fires one gap alert, active layers stay quiet") {
     val orig = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
